@@ -7,12 +7,9 @@ The reference's sinks collect chunks to the caller
 half a Spark deployment needs: durable, partitioned, atomically
 published file output for downstream consumers.
 
-Atomicity: Spark's file committer makes a single ``df.write`` all-or-
-nothing per directory, but a RE-export over a previous export is not —
-a reader can observe the half-deleted old result. Like
-``sources/store.ingest``, writes here land in a ``_tmp`` sibling and
-are renamed into place, so concurrent readers see the old result or
-the new one, never a mix.
+Atomicity: every export is published like a store
+(``sources/store.publish``): ``path`` becomes a link to the newest
+generation of the result.
 
 Scale notes: ``partition_by`` turns reader predicates into directory
 pruning; ``sort_by`` sorts WITHIN partitions before the write so
@@ -23,12 +20,12 @@ columnar consumers should read the parquet.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame
+
+from dqe_spark.sources.store import publish
 
 FORMATS = ("parquet", "csv", "json")
 
@@ -48,12 +45,6 @@ def write_result(
     """
     if format not in FORMATS:
         raise ValueError(f"unknown sink format {format!r}; one of {FORMATS}")
-    out = Path(path)
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    tmp.parent.mkdir(parents=True, exist_ok=True)
-
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
     writer = df.write.mode("overwrite").format(format)
@@ -61,18 +52,7 @@ def write_result(
         writer = writer.partitionBy(*list(partition_by))
     if format == "csv":
         writer = writer.option("header", str(header).lower())
-    writer.save(str(tmp))
-
-    if out.exists():
-        shutil.rmtree(out)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # lost a concurrent race — keep the winner's output
-        if not out.exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return str(out)
+    return str(publish(Path(path), lambda gen: writer.save(str(gen))))
 
 
 def export_named_results(

@@ -8,7 +8,7 @@ then reads only the probed cells' files (directory-level pruning) and
 scans codes (m small ints/row) instead of raw vectors. This module is
 that deployment shape:
 
-    _store/<sf>/ann/                 (atomic tmp+rename, like store.py)
+    _store/<sf>/ann/                 (published by store.publish)
         meta.json                    centroids + PQ codebooks (a few KB)
         index/cell=<c>/*.parquet     (vec_id, codes, embedding)
 
@@ -33,14 +33,19 @@ alternative (separate vector store + join) pays a shuffle per query.
 from __future__ import annotations
 
 import json
-import os
 import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    current,
+    invalidate_load_memo,
+    publish,
+    session_load_memo,
+)
 
 
 def _ann_dir(sf_dir: str) -> Path:
@@ -48,8 +53,9 @@ def _ann_dir(sf_dir: str) -> Path:
 
 
 def ann_path(sf_dir: str) -> Path | None:
+    """The index's current generation, or None when never built."""
     p = _ann_dir(sf_dir)
-    return p if (p / "index" / "_SUCCESS").exists() else None
+    return current(p) if (p / "index" / "_SUCCESS").exists() else None
 
 
 def ingest_ann(
@@ -79,9 +85,6 @@ def ingest_ann(
     bytes ≈ probes × target_cell × row_size, independent of n. At
     registry scales auto_clusters lands on the historical 8, so
     nothing moves at the gate."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     from dqe_spark.operators import similarity as S
 
     out = _ann_dir(sf_dir)
@@ -102,40 +105,27 @@ def ingest_ann(
         .withColumn("cell", S._nearest_centroid(F.col(vec), cents))
         .join(coded, id_col)
     )
-    tmp = out.parent / "_tmp_ann"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (tmp / "index").parent.mkdir(parents=True, exist_ok=True)
-    (
-        indexed.repartition("cell")
-        .sortWithinPartitions("cell", id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(str(tmp / "index"))
-    )
-    (tmp / "meta.json").write_text(
-        json.dumps(
-            {
-                "centroids": cents,
-                "codebooks": books,
-                "m_sub": m_sub,
-                "n_codes": n_codes,
-                "n_clusters": n_clusters,
-                "vec": vec,
-                "id_col": id_col,
-            }
+    meta = {
+        "centroids": cents,
+        "codebooks": books,
+        "m_sub": m_sub,
+        "n_codes": n_codes,
+        "n_clusters": n_clusters,
+        "vec": vec,
+        "id_col": id_col,
+    }
+
+    def write(gen: Path) -> None:
+        (
+            indexed.repartition("cell")
+            .sortWithinPartitions("cell", id_col)
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(str(gen / "index"))
         )
-    )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if ann_path(sf_dir) is None:
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        (gen / "meta.json").write_text(json.dumps(meta))
+
+    return publish(out, write)
 
 
 def merge_ann_increment(
@@ -153,8 +143,6 @@ def merge_ann_increment(
     first so the write doesn't read from the path it overwrites. This
     mirrors rollup.merge_rollup_increment — at 100 TB a nightly vector
     backfill costs proportional to the new data, not the index."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
     from dqe_spark.operators import similarity as S
 
@@ -203,7 +191,7 @@ def merge_ann_increment(
         if c not in present:
             shutil.rmtree(p / "index" / f"cell={c}", ignore_errors=True)
     spark.catalog.refreshByPath(str(p / "index"))
-    return p
+    return _ann_dir(sf_dir)
 
 
 def load_ann(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict] | None:
@@ -214,7 +202,6 @@ def load_ann(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict] | None:
     p = ann_path(sf_dir)
     if p is None:
         return None
-    from dqe_spark.sources.store import session_load_memo
 
     def _load():
         meta = json.loads((p / "meta.json").read_text())
@@ -325,8 +312,6 @@ def purge_vector_ids(
     centroids/codebooks are untouched (they are trained artifacts, not
     per-vector state). A purged vector can no longer be served by any
     probe."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
     p = ann_path(sf_dir)
     if p is None:
@@ -364,4 +349,4 @@ def purge_vector_ids(
             shutil.rmtree(p / "index" / f"cell={c}", ignore_errors=True)
     # rewritten files replace the session's cached listing for the path
     spark.catalog.refreshByPath(str(p / "index"))
-    return p
+    return _ann_dir(sf_dir)

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 
 from dqe_spark.sources.store import (
     STORE_ROOT,
-    invalidate_load_memo,
+    current,
+    publish,
     session_load_memo,
 )
 
@@ -93,12 +94,10 @@ def build_dsir_model(
     docs: DataFrame | None = None,
 ) -> Path:
     """Fit the model counts over the documents corpus (idempotent,
-    atomic tmp+rename): one gram pass, ≤B output rows, coalesced to a
-    single file — the model is KBs at any corpus size. ``docs``
-    overrides the corpus source (backfill-then-stream splits, tests)."""
-    import os
-    import shutil
-
+    published through store.publish): one gram pass, ≤B output rows,
+    coalesced to a single file — the model is KBs at any corpus size.
+    ``docs`` overrides the corpus source (backfill-then-stream splits,
+    tests)."""
     from dqe_spark.operators.text import (
         dsir_bucket_counts,
         dsir_model_counts,
@@ -107,7 +106,6 @@ def build_dsir_model(
     out = _dsir_dir(sf_dir, target_lang)
     if not force and (out / "_SUCCESS").exists():
         return out
-    invalidate_load_memo()
     if docs is None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     model = dsir_model_counts(
@@ -115,23 +113,15 @@ def build_dsir_model(
             docs, F.col("lang") == target_lang, n_buckets
         )
     )
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
+    return publish(out, lambda gen: _write_model(model, gen, n_buckets))
+
+
+def _write_model(model: DataFrame, gen: Path, n_buckets: int | None) -> None:
     model.coalesce(1).sortWithinPartitions("bucket").write.mode(
         "overwrite"
-    ).parquet(str(tmp))
-    (tmp / "_B").write_text(str(n_buckets))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    ).parquet(str(gen))
+    if n_buckets is not None:
+        (gen / "_B").write_text(str(n_buckets))
 
 
 def write_dsir_stream_part(
@@ -144,22 +134,10 @@ def write_dsir_stream_part(
     snapshot — called by streaming/ingest.stream_dsir_model's
     foreachBatch with the full complete-mode aggregate, so a replayed
     trigger rewrites the same rows instead of double-counting."""
-    import shutil
-
-    out = _stream_dir(sf_dir, target_lang)
-    invalidate_load_memo()
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    model_df.coalesce(1).sortWithinPartitions("bucket").write.mode(
-        "overwrite"
-    ).parquet(str(tmp))
-    if out.exists():
-        shutil.rmtree(out)
-    import os
-
-    os.rename(tmp, out)
-    return out
+    return publish(
+        _stream_dir(sf_dir, target_lang),
+        lambda gen: _write_model(model_df, gen, None),
+    )
 
 
 def load_dsir_model(
@@ -173,11 +151,11 @@ def load_dsir_model(
     p = _dsir_dir(sf_dir, target_lang)
     if not (p / "_SUCCESS").exists():
         build_dsir_model(spark, sf_dir, target_lang)
-    sp = _stream_dir(sf_dir, target_lang)
+    gen, sp = current(p), current(_stream_dir(sf_dir, target_lang))
 
     def _load() -> DataFrame:
-        base = spark.read.parquet(str(p))
-        if not (sp / "_SUCCESS").exists():
+        base = spark.read.parquet(str(gen))
+        if sp is None or not (sp / "_SUCCESS").exists():
             return base
         return (
             base.unionByName(spark.read.parquet(str(sp)))
@@ -188,7 +166,7 @@ def load_dsir_model(
             )
         )
 
-    return session_load_memo(spark, ("dsir", str(p)), _load)
+    return session_load_memo(spark, ("dsir", str(gen), str(sp)), _load)
 
 
 def merge_dsir_increment(
@@ -202,13 +180,9 @@ def merge_dsir_increment(
     proportional to the new data, result equals a from-scratch rebuild
     over the union (counts are additive; pinned in
     tests/test_dsir_store.py). The model is ≤B rows, so the rewrite is
-    a full single-file rewrite — via the same tmp+``_B``+rename shape
-    as build_dsir_model (every store write in the repo is an atomic
-    rename; a crash mid-write leaves the previous model intact, never
-    a marker-less or half-written live dir)."""
-    import os
-    import shutil
-
+    a full single-file rewrite published as a new generation, like
+    build_dsir_model: the generation being read is never touched, and
+    a crash mid-write leaves the previous model live."""
     from dqe_spark.operators.text import (
         dsir_bucket_counts,
         dsir_model_counts,
@@ -218,30 +192,17 @@ def merge_dsir_increment(
     if not (out / "_SUCCESS").exists():
         build_dsir_model(spark, sf_dir, target_lang)
         return out
-    invalidate_load_memo()
     b = dsir_b(sf_dir, target_lang)
     inc = dsir_model_counts(
         dsir_bucket_counts(new_docs, F.col("lang") == target_lang, b)
     )
     merged = (
-        spark.read.parquet(str(out))
+        spark.read.parquet(str(current(out)))
         .unionByName(inc)
         .groupBy("bucket")
         .agg(
             F.sum("ct").cast("long").alias("ct"),
             F.sum("cr").cast("long").alias("cr"),
         )
-        # sever lineage from the live dir before replacing it: the
-        # write below must not re-read the path it is overwriting
-        .localCheckpoint(eager=True)
     )
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    merged.coalesce(1).sortWithinPartitions("bucket").write.mode(
-        "overwrite"
-    ).parquet(str(tmp))
-    (tmp / "_B").write_text(str(b))
-    shutil.rmtree(out)
-    os.rename(tmp, out)
-    return out
+    return publish(out, lambda gen: _write_model(merged, gen, b))

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from dqe_spark.operators.dedup import merge_position_islands, positional_grams
 from dqe_spark.operators.partitioning import spread
-from dqe_spark.sources.store import STORE_ROOT, auto_buckets
+from dqe_spark.sources.store import STORE_ROOT, auto_buckets, current, publish
 
 K_GRAM = 5
 #: floor of the auto-sized layout (also the legacy fixed count — a
@@ -104,8 +104,8 @@ def build_gram_store(
     target_rows: int = GRAM_TARGET_ROWS,
     variant: str | None = None,
 ) -> Path:
-    """Materialize the corpus's positional grams (idempotent, atomic
-    tmp+rename). ``docs`` overrides the corpus source;
+    """Materialize the corpus's positional grams (idempotent, published
+    through store.publish). ``docs`` overrides the corpus source;
     ``n_buckets=None`` auto-sizes from the gram count; ``variant``
     builds an independent sibling store (fixtures never mutate the
     canonical one)."""
@@ -120,9 +120,6 @@ def build_gram_store(
         return out
     if docs is None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
     if n_buckets is None:
         # auto-size: materialize once (checkpoint), count, then re-key
         # if the chosen layout differs from the default hash
@@ -137,19 +134,7 @@ def build_gram_store(
         grams = grams.withColumn(
             "gb", F.pmod(F.crc32(F.col("gram")), F.lit(n_buckets)).cast("int")
         )
-    _write_layout(grams, tmp, n_buckets)
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    import os
-
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(out, lambda gen: _write_layout(grams, gen, n_buckets))
 
 
 def rebucket_gram_store(
@@ -173,22 +158,13 @@ def rebucket_gram_store(
         f"(full rewrite, amortized over the growth that triggered it)"
     )
     rekeyed = (
-        spark.read.parquet(str(p))
+        spark.read.parquet(str(current(p)))
         .select("doc_id", "p", "gram")
         .withColumn(
             "gb", F.pmod(F.crc32(F.col("gram")), F.lit(n_buckets)).cast("int")
         )
-        .localCheckpoint(eager=True)
     )
-    tmp = p.parent / f"_tmp_{p.name}_rebucket"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    _write_layout(rekeyed, tmp, n_buckets)
-    shutil.rmtree(p)
-    import os
-
-    os.rename(tmp, p)
-    return p
+    return publish(p, lambda gen: _write_layout(rekeyed, gen, n_buckets))
 
 
 def merge_gram_increment(
@@ -220,7 +196,7 @@ def merge_gram_increment(
     )
     p = _store_dir(sf_dir, variant)
     inc_rows = _grams_of(spread(new_docs), k).count()
-    stored_rows = spark.read.parquet(str(p)).count()  # column-pruned scan
+    stored_rows = spark.read.parquet(str(current(p))).count()  # column-pruned scan
     desired = auto_buckets(
         stored_rows + inc_rows, target_rows, lo=N_GRAM_BUCKETS
     )
@@ -229,7 +205,8 @@ def merge_gram_increment(
     nb = _n_buckets(p)
     inc = _grams_of(spread(new_docs), k, nb)
     new_ids = new_docs.select("doc_id").distinct()
-    stored = spark.read.parquet(str(p))
+    live = current(p)
+    stored = spark.read.parquet(str(live))
     stale_gb = stored.join(F.broadcast(new_ids), "doc_id", "left_semi").select(
         "gb"
     )
@@ -252,7 +229,7 @@ def merge_gram_increment(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("gb")
-        .parquet(str(p))
+        .parquet(str(live))
     )
     # dynamic overwrite cannot vacate a bucket whose merged frame is
     # empty — delete those explicitly (same hole the minhash store
@@ -260,7 +237,7 @@ def merge_gram_increment(
     present = {r["gb"] for r in merged.select("gb").distinct().collect()}
     for b in touched_gb:
         if b not in present:
-            shutil.rmtree(p / f"gb={b}", ignore_errors=True)
+            shutil.rmtree(live / f"gb={b}", ignore_errors=True)
     return p
 
 
@@ -279,7 +256,7 @@ def spans_against_store(
     probed via the (gb, gram) bucket join and never re-read in full.
 
     Output: (doc_id, span_start, span_tokens) over the new docs."""
-    p = _store_dir(sf_dir, variant)
+    p = current(_store_dir(sf_dir, variant))
     nb = _grams_of(spread(new_docs), k, _n_buckets(p)).select(
         "doc_id", "p", "gram", "gb"
     )
@@ -300,7 +277,8 @@ def _drop_rows_where(spark: SparkSession, p: Path, gone) -> Path:
     touching only the buckets that actually hold such rows (dynamic
     partition overwrite); buckets left empty are unlinked so the store
     equals a rebuild from the filtered corpus."""
-    stored = spark.read.parquet(str(p))
+    live = current(p)
+    stored = spark.read.parquet(str(live))
     touched = sorted(
         r["gb"] for r in stored.where(gone).select("gb").distinct().collect()
     )
@@ -317,12 +295,12 @@ def _drop_rows_where(spark: SparkSession, p: Path, gone) -> Path:
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("gb")
-        .parquet(str(p))
+        .parquet(str(live))
     )
     present = {r["gb"] for r in kept.select("gb").distinct().collect()}
     for b in touched:
         if b not in present:
-            shutil.rmtree(p / f"gb={b}", ignore_errors=True)
+            shutil.rmtree(live / f"gb={b}", ignore_errors=True)
     return p
 
 

@@ -22,12 +22,11 @@ the store rebuildable bit-identically from doc_ids alone.
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import STORE_ROOT, current, publish
 
 
 def _store_dir(sf_dir: str, variant: str = "baseline") -> Path:
@@ -39,9 +38,10 @@ def build_media_store(
     spark: SparkSession, sf_dir: str, force: bool = False,
     variant: str = "baseline",
 ) -> Path:
-    """Materialize the JPEG fixture corpus (idempotent, atomic
-    tmp+rename). Encode runs executor-side in Arrow batches — one
-    map-only pass over doc_ids, no shuffle.
+    """Materialize the JPEG fixture corpus (idempotent, published
+    through store.publish with its _FIXTURE marker). Encode runs
+    executor-side in Arrow batches — one map-only pass over doc_ids,
+    no shuffle.
 
     Variants live in their OWN directories (the advisor-r7 lesson
     from the gram-store subset fixture: never repurpose a shared
@@ -124,28 +124,16 @@ def build_media_store(
                 recs, columns=["doc_id", "content", "media_type"]
             )
 
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        spread(docs)
-        .mapInPandas(synth, "doc_id long, content binary, media_type string")
-        .write.mode("overwrite")
-        .parquet(str(tmp))
-    )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    import os
+    def write(gen: Path) -> None:
+        (
+            spread(docs)
+            .mapInPandas(synth, "doc_id long, content binary, media_type string")
+            .write.mode("overwrite")
+            .parquet(str(gen))
+        )
+        (gen / "_FIXTURE").write_text(ver)
 
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    (out / "_FIXTURE").write_text(ver)
-    return out
+    return publish(out, write)
 
 
 def load_media_store(
@@ -154,4 +142,4 @@ def load_media_store(
     # build_media_store is the no-op fast path when the store exists
     # AND carries the current fixture version (stale recipes rebuild)
     p = build_media_store(spark, sf_dir, variant=variant)
-    return spark.read.parquet(str(p))
+    return spark.read.parquet(str(current(p)))

@@ -48,7 +48,7 @@ from dqe_spark.operators.dedup import (
     shingle_sets,
 )
 from dqe_spark.operators.partitioning import spread
-from dqe_spark.sources.store import STORE_ROOT, auto_buckets
+from dqe_spark.sources.store import STORE_ROOT, auto_buckets, current, publish
 
 #: floor of the auto-sized layout (also the legacy fixed count — a
 #: pre-marker store on disk reads back as 64).
@@ -121,7 +121,7 @@ def build_minhash_store(
     variant: str | None = None,
 ) -> Path:
     """Materialize band keys + shingle sets for the corpus (idempotent,
-    atomic tmp+rename). ``docs`` overrides the corpus source;
+    published through store.publish). ``docs`` overrides the corpus source;
     ``n_buckets=None`` auto-sizes from the band-row count (docs ×
     MINHASH_BANDS — known after one cheap count, no band
     materialization needed)."""
@@ -140,23 +140,12 @@ def build_minhash_store(
             docs.count() * MINHASH_BANDS, target_rows, lo=N_KEY_BUCKETS
         )
     sets = shingle_sets(spread(docs))
-    tmp = out.parent / f"_tmp_{out.name}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    _write_layout(_bands_of(sets, n_buckets=n_buckets), tmp, n_buckets)
-    sets.write.mode("overwrite").parquet(str(tmp / "_shingles"))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    import os
 
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def write(gen: Path) -> None:
+        _write_layout(_bands_of(sets, n_buckets=n_buckets), gen, n_buckets)
+        sets.write.mode("overwrite").parquet(str(gen / "_shingles"))
+
+    return publish(out, write)
 
 
 def rebucket_minhash_store(
@@ -178,25 +167,21 @@ def rebucket_minhash_store(
         f"[minhash_store] re-bucketing {p}: {cur} -> {n_buckets} buckets "
         f"(full rewrite, amortized over the growth that triggered it)"
     )
+    live = current(p)
     rekeyed = (
-        spark.read.parquet(str(p))
+        spark.read.parquet(str(live))
         .select("doc_id", "band", "key")
         .withColumn(
             "bb", F.pmod(F.crc32(F.col("key")), F.lit(n_buckets)).cast("int")
         )
-        .localCheckpoint(eager=True)
     )
-    tmp = p.parent / f"_tmp_{p.name}_rebucket"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    _write_layout(rekeyed, tmp, n_buckets)
-    # carry the sidecar over (it is bucket-agnostic)
-    shutil.copytree(p / "_shingles", tmp / "_shingles")
-    shutil.rmtree(p)
-    import os
 
-    os.rename(tmp, p)
-    return p
+    def write(gen: Path) -> None:
+        _write_layout(rekeyed, gen, n_buckets)
+        # carry the sidecar over (it is bucket-agnostic)
+        shutil.copytree(live / "_shingles", gen / "_shingles")
+
+    return publish(p, write)
 
 
 def merge_minhash_increment(
@@ -229,7 +214,7 @@ def merge_minhash_increment(
     )
     p = _store_dir(sf_dir, variant)
     stored_docs = (
-        spark.read.parquet(str(p / "_shingles")).count()
+        spark.read.parquet(str(current(p) / "_shingles")).count()
         + new_docs.select("doc_id").distinct().count()
     )
     desired = auto_buckets(
@@ -239,7 +224,8 @@ def merge_minhash_increment(
         rebucket_minhash_store(spark, sf_dir, desired, variant)
     inc = _bands_of(shingle_sets(spread(new_docs)), n_buckets=_n_buckets(p))
     new_ids = new_docs.select("doc_id").distinct()
-    stored = spark.read.parquet(str(p))
+    live = current(p)
+    stored = spark.read.parquet(str(live))
     stale_bb = stored.join(F.broadcast(new_ids), "doc_id", "left_semi").select(
         "bb"
     )
@@ -264,7 +250,7 @@ def merge_minhash_increment(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bb")
-        .parquet(str(p))
+        .parquet(str(live))
     )
     # Dynamic partition overwrite only rewrites partitions PRESENT in
     # the output: a touched bucket whose merged frame has zero rows
@@ -275,8 +261,8 @@ def merge_minhash_increment(
     present = {r["bb"] for r in merged.select("bb").distinct().collect()}
     for b in touched_bb:
         if b not in present:
-            shutil.rmtree(p / f"bb={b}", ignore_errors=True)
-    sh_path = p / "_shingles"
+            shutil.rmtree(live / f"bb={b}", ignore_errors=True)
+    sh_path = live / "_shingles"
     sh = (
         spark.read.parquet(str(sh_path))
         .join(F.broadcast(new_ids), "doc_id", "left_anti")
@@ -305,7 +291,7 @@ def neardup_against_store(
     doc_id is excluded (it is not a duplicate of itself)."""
     from pyspark import StorageLevel
 
-    p = _store_dir(sf_dir, variant)
+    p = current(_store_dir(sf_dir, variant))
     new_sets = shingle_sets(spread(new_docs), col, id_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -353,8 +339,9 @@ def purge_doc_ids(
     too. A purged doc can never again appear as a candidate OR as
     verification evidence."""
     p = _store_dir(sf_dir, variant)
+    live = current(p)
     ids = F.broadcast(doc_ids.select("doc_id").distinct())
-    bands = spark.read.parquet(str(p))
+    bands = spark.read.parquet(str(live))
     touched_bb = sorted(
         r["bb"]
         for r in bands.join(ids, "doc_id", "left_semi")
@@ -374,7 +361,7 @@ def purge_doc_ids(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bb")
-        .parquet(str(p))
+        .parquet(str(live))
     )
     # same empty-touched-bucket hole as merge_minhash_increment: a
     # bucket fully occupied by purged docs yields no output partition,
@@ -383,8 +370,8 @@ def purge_doc_ids(
     present = {r["bb"] for r in kept.select("bb").distinct().collect()}
     for b in touched_bb:
         if b not in present:
-            shutil.rmtree(p / f"bb={b}", ignore_errors=True)
-    sh_path = p / "_shingles"
+            shutil.rmtree(live / f"bb={b}", ignore_errors=True)
+    sh_path = live / "_shingles"
     sh = (
         spark.read.parquet(str(sh_path))
         .join(ids, "doc_id", "left_anti")
@@ -406,9 +393,8 @@ def expire_docs_before(
     every band row and shingle of doc_id < cutoff is dropped via the
     SAME rewrite purge_doc_ids uses, so post-TTL store == rebuild from
     the age-filtered corpus (pinned in tests/test_minhash_store.py)."""
-    p = _store_dir(sf_dir, variant)
     old = (
-        spark.read.parquet(str(p / "_shingles"))
+        spark.read.parquet(str(current(_store_dir(sf_dir, variant)) / "_shingles"))
         .select("doc_id")
         .where(F.col("doc_id") < int(doc_id_cutoff))
     )

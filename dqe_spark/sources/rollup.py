@@ -24,14 +24,19 @@ Layout mirrors the metric store (partition pruning + ts-sorted rows):
 
 from __future__ import annotations
 
-import os
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    current,
+    invalidate_load_memo,
+    publish,
+    read_current,
+    session_load_memo,
+)
 
 #: window aggregates answerable from the partials
 _DISTRIBUTIVE = {"sum", "avg", "min", "max", "count", "variance", "stddev"}
@@ -77,23 +82,17 @@ def point_partials(
 def _atomic_write(
     partials: DataFrame,
     out: Path,
-    tmp_name: str,
     part_cols: tuple[str, ...] = ("bucket", "metric"),
     sort_cols: tuple[str, ...] = ("wts",),
     markers: dict[str, str] | None = None,
 ) -> Path:
-    """Write ``partials`` to ``out`` via tmp-dir + rename. ``markers``
-    (e.g. ``{"_WIDTH": "8192"}``) are sidecar layout files written INTO
-    the tmp dir BEFORE the rename: a reader can never observe a
-    ``_SUCCESS``-complete store whose marker is missing — a store whose
-    rows were hashed at a non-default layout but whose marker fell back
-    to the default reads garbage positions silently."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
-    tmp = out.parent / tmp_name
-    if tmp.exists():
-        shutil.rmtree(tmp)
+    """Publish ``partials`` as a new generation of ``out``
+    (store.publish). ``markers`` (e.g. ``{"_WIDTH": "8192"}``) are
+    sidecar layout files written INTO the generation before it is
+    published: a reader can never observe a ``_SUCCESS``-complete
+    store whose marker is missing — a store whose rows were hashed at
+    a non-default layout but whose marker fell back to the default
+    reads garbage positions silently."""
     laid = (
         partials.repartition(*part_cols)
         if part_cols
@@ -102,19 +101,13 @@ def _atomic_write(
     writer = laid.write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
-    writer.parquet(str(tmp))
-    for name, value in (markers or {}).items():
-        (tmp / name).write_text(value)
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    def write(gen: Path) -> None:
+        writer.parquet(str(gen))
+        for name, value in (markers or {}).items():
+            (gen / name).write_text(value)
+
+    return publish(out, write)
 
 
 def _sidecar_markers(store: Path) -> dict[str, str]:
@@ -135,18 +128,14 @@ def _sidecar_markers(store: Path) -> dict[str, str]:
 def build_rollup(
     spark: SparkSession, sf_dir: str, res_ms: int = 60_000, force: bool = False
 ) -> Path:
-    """Materialize the base rollup from the metric store (idempotent,
-    atomic via tmp-dir rename, same as the store ingest)."""
+    """Materialize the base rollup from the metric store (idempotent;
+    published through store.publish like every store)."""
     from dqe_spark.sources.metric_store import load_metrics
 
     out = _rollup_dir(sf_dir, res_ms)
     if not force and (out / "_SUCCESS").exists():
         return out
-    return _atomic_write(
-        point_partials(load_metrics(spark, sf_dir), res_ms),
-        out,
-        f"_tmp_rollup_{res_ms}ms",
-    )
+    return _atomic_write(point_partials(load_metrics(spark, sf_dir), res_ms), out)
 
 
 #: canonical column types build_rollup's writer produces — the merge
@@ -176,16 +165,15 @@ def merge_rollup_increment(
     write doesn't read from the path it overwrites. This is the batch
     twin of streaming.stream_rollup_partials (late/backfill data beyond
     the stream's watermark lands here)."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
     out = _rollup_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         build_rollup(spark, sf_dir, res_ms)
         return out
+    live = str(current(out))
     inc = point_partials(new_points, res_ms)
     affected = inc.select("bucket", "metric").distinct()
-    existing = spark.read.parquet(str(out)).join(
+    existing = spark.read.parquet(live).join(
         F.broadcast(affected), ["bucket", "metric"], "left_semi"
     )
     merged = (
@@ -211,7 +199,7 @@ def merge_rollup_increment(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "metric")
-        .parquet(str(out))
+        .parquet(live)
     )
     return out
 
@@ -228,9 +216,6 @@ def cascade_rollup(
     hierarchy costs one pass over the finer rollup, never a raw scan.
     This is how a 1s→1m→1h→1d ladder stays cheap to maintain at
     100 TB: each level reads only the level below."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
     if to_res_ms % from_res_ms != 0:
         raise ValueError("coarse resolution must be a multiple of the fine one")
     out = _rollup_dir(sf_dir, to_res_ms)
@@ -253,37 +238,14 @@ def cascade_rollup(
         )
         .withColumnRenamed("w2", "wts")
     )
-    tmp = out.parent / f"_tmp_rollup_{to_res_ms}ms"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        partials.repartition("bucket", "metric")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "metric")
-        .parquet(str(tmp))
-    )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _atomic_write(partials, out)
 
 
 def load_rollup(spark: SparkSession, sf_dir: str, res_ms: int = 60_000) -> DataFrame:
     p = _rollup_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 def partial_value_expr(agg: str) -> Column:
@@ -410,26 +372,7 @@ def build_hist_rollup(
         .groupBy("bucket", "metric", "wts", "v100")
         .agg(F.count("*").alias("cnt"))
     )
-    tmp = out.parent / f"_tmp_rollup_hist_{res_ms}ms"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        partials.repartition("bucket", "metric")
-        .sortWithinPartitions("wts", "v100")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "metric")
-        .parquet(str(tmp))
-    )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _atomic_write(partials, out, sort_cols=("wts", "v100"))
 
 
 def load_hist_rollup(
@@ -438,11 +381,7 @@ def load_hist_rollup(
     p = _hist_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_hist_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 def hist_rollup_percentile(
@@ -541,12 +480,7 @@ def build_distinct_rollup(
         .groupBy("event_type", "wts")
         .agg(F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sketch"))
     )
-    return _atomic_write(
-        partials,
-        out,
-        f"_tmp_rollup_distinct_{res_ms}ms",
-        part_cols=("event_type",),
-    )
+    return _atomic_write(partials, out, part_cols=("event_type",))
 
 
 def load_distinct_rollup(
@@ -555,11 +489,7 @@ def load_distinct_rollup(
     p = _distinct_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_distinct_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 def distinct_rollup_agg(
@@ -593,13 +523,12 @@ def merge_distinct_increment(
     are union-mergeable, so the increment is sketch-agg the new points
     and hll_union_agg against the stored cells — same shape as
     merge_rollup_increment, cost proportional to the new data."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
     out = _distinct_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         build_distinct_rollup(spark, sf_dir, res_ms)
         return out
+    live = str(current(out))
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = (
         new_events.select("event_type", wts, "user_id")
@@ -607,7 +536,7 @@ def merge_distinct_increment(
         .agg(F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sketch"))
     )
     touched = inc.select("event_type").distinct()
-    existing = spark.read.parquet(str(out)).join(
+    existing = spark.read.parquet(live).join(
         F.broadcast(touched), "event_type", "left_semi"
     )
     merged = (
@@ -622,7 +551,7 @@ def merge_distinct_increment(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_type")
-        .parquet(str(out))
+        .parquet(live)
     )
     return out
 
@@ -668,10 +597,7 @@ def build_portable_distinct_rollup(
         "user_id",
     )
     return _atomic_write(
-        hll_pack(regs, ["event_type", "wts"]),
-        out,
-        f"_tmp_rollup_pdistinct_{res_ms}ms",
-        part_cols=("event_type",),
+        hll_pack(regs, ["event_type", "wts"]), out, part_cols=("event_type",)
     )
 
 
@@ -683,7 +609,7 @@ def load_portable_distinct_rollup(
         build_portable_distinct_rollup(spark, sf_dir, res_ms)
 
     def _load() -> DataFrame:
-        df = spark.read.parquet(str(p))
+        df = spark.read.parquet(str(current(p)))
         # stale on-disk layouts rebuild in place: the pre-round-8
         # register relation (no regs column) and the short-lived dense
         # int-array pack (regs: array<int> not array<struct<bucket,r>>)
@@ -691,12 +617,10 @@ def load_portable_distinct_rollup(
             "regs"
         ].startswith("array<struct"):
             build_portable_distinct_rollup(spark, sf_dir, res_ms, force=True)
-            df = spark.read.parquet(str(p))
+            df = spark.read.parquet(str(current(p)))
         return df
 
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(spark, ("store", str(p)), _load)
+    return session_load_memo(spark, ("store", str(current(p))), _load)
 
 
 def portable_distinct_agg(
@@ -741,8 +665,6 @@ def merge_portable_distinct_increment(
     stored cells of the touched event_types — cost proportional to the
     new data, and the result equals a from-scratch rebuild (max is
     idempotent and associative; pinned in tests/test_rollup.py)."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
     from dqe_spark.operators.sketches import (
         hll_merge_packed,
@@ -754,6 +676,7 @@ def merge_portable_distinct_increment(
     if not (out / "_SUCCESS").exists():
         build_portable_distinct_rollup(spark, sf_dir, res_ms)
         return out
+    live = str(current(out))
     invalidate_retention_memo()
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = hll_pack(
@@ -765,7 +688,7 @@ def merge_portable_distinct_increment(
         ["event_type", "wts"],
     )
     touched = inc.select("event_type").distinct()
-    existing = spark.read.parquet(str(out)).join(
+    existing = spark.read.parquet(live).join(
         F.broadcast(touched), "event_type", "left_semi"
     )
     merged = hll_merge_packed(
@@ -777,7 +700,7 @@ def merge_portable_distinct_increment(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_type")
-        .parquet(str(out))
+        .parquet(live)
     )
     return out
 
@@ -813,9 +736,7 @@ def build_tagged_rollup(
     if not force and (out / "_SUCCESS").exists():
         return out
     return _atomic_write(
-        point_partials(load_metrics(spark, sf_dir), res_ms, dims=dims),
-        out,
-        f"_tmp_rollup_tagged_{res_ms}ms",
+        point_partials(load_metrics(spark, sf_dir), res_ms, dims=dims), out
     )
 
 
@@ -853,7 +774,7 @@ def cascade_tagged_rollup(
         )
         .withColumnRenamed("w2", "wts")
     )
-    return _atomic_write(partials, out, f"_tmp_rollup_tagged_{to_res_ms}ms")
+    return _atomic_write(partials, out)
 
 
 def load_tagged_rollup(
@@ -865,11 +786,7 @@ def load_tagged_rollup(
             cascade_tagged_rollup(spark, sf_dir, 60_000, res_ms)
         else:
             build_tagged_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 # ------------------------------------------------------------ tagged hist
@@ -914,12 +831,7 @@ def build_tagged_hist_rollup(
         .groupBy("bucket", "metric", *dims, "wts", "v100")
         .agg(F.count("*").alias("cnt"))
     )
-    return _atomic_write(
-        partials,
-        out,
-        f"_tmp_rollup_tagged_hist_{res_ms}ms",
-        sort_cols=("wts", "v100"),
-    )
+    return _atomic_write(partials, out, sort_cols=("wts", "v100"))
 
 
 def load_tagged_hist_rollup(
@@ -928,11 +840,7 @@ def load_tagged_hist_rollup(
     p = _tagged_hist_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_tagged_hist_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 # ---------------------------------------------------- incremental merges
@@ -957,11 +865,10 @@ def _merge_touched_partitions(
     """Shared increment fold: read only the (bucket, metric) partitions
     the increment touches, re-aggregate existing ∪ inc, dynamically
     overwrite exactly those directories."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
+    live = str(current(out))
     affected = inc.select("bucket", "metric").distinct()
-    existing = spark.read.parquet(str(out)).join(
+    existing = spark.read.parquet(live).join(
         F.broadcast(affected), ["bucket", "metric"], "left_semi"
     )
     merged = existing.unionByName(inc).groupBy(*group_cols).agg(*agg_exprs)
@@ -977,7 +884,7 @@ def _merge_touched_partitions(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "metric")
-        .parquet(str(out))
+        .parquet(live)
     )
     return out
 
@@ -1100,11 +1007,9 @@ def expire_rollup_before(
     partition-unlink `expire_before`; each ladder level is 60–1440×
     smaller than the level below), so the typical TTL ladder — raw 30d,
     1m one year, 1h forever — rewrites only the small stores and
-    unlinks the big one. Atomic tmp-dir rename, same as the builders.
-    Returns the store path, or None if the level does not exist."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
-    invalidate_load_memo()
+    unlinks the big one. Published as a new generation, same as the
+    builders. Returns the store path, or None if the level does not
+    exist."""
     # a live session may hold checkpointed day registers built from
     # the pre-expiry pdistinct store — drop them too, or retention
     # keeps serving windows that were just TTL-expired
@@ -1115,15 +1020,14 @@ def expire_rollup_before(
     if not (out / "_SUCCESS").exists():
         return None
     aligned = cutoff_ms - (cutoff_ms % res_ms)
-    kept = spark.read.parquet(str(out)).where(F.col("wts") >= aligned)
+    kept = spark.read.parquet(str(current(out))).where(F.col("wts") >= aligned)
     part_cols = (
         ("event_type",) if ladder in _EVENT_LADDERS else ("bucket", "metric")
     )
     sort_cols = ("wts", "v100") if ladder.endswith("hist") else ("wts",)
     return _atomic_write(
-        kept.localCheckpoint(eager=True),
+        kept,
         out,
-        f"_tmp_expire_{ladder}_{res_ms}ms",
         part_cols=part_cols,
         sort_cols=sort_cols,
         # carry the layout markers (CMS _WIDTH) through the rewrite:
@@ -1204,15 +1108,11 @@ def build_cms_rollup(
         )
         w = auto_cms_width(int(n_max or 0))
     regs = cms_registers(src, ["event_type", "wts"], "user_id", w=w)
-    # _WIDTH rides inside the tmp dir through the rename (the _B
-    # pattern of build_dsir_model): a crash can never leave a
-    # _SUCCESS-complete auto-width store that reads back at the floor
+    # _WIDTH is published inside the generation (the _B pattern of
+    # build_dsir_model): a crash can never leave a _SUCCESS-complete
+    # auto-width store that reads back at the floor
     return _atomic_write(
-        regs,
-        out,
-        f"_tmp_rollup_cms_{res_ms}ms",
-        part_cols=("event_type",),
-        markers={"_WIDTH": str(w)},
+        regs, out, part_cols=("event_type",), markers={"_WIDTH": str(w)}
     )
 
 
@@ -1238,9 +1138,7 @@ def build_cms_watchlist(
         .limit(CMS_WATCH_K)
         .select("user_id")
     )
-    return _atomic_write(
-        top, out, "_tmp_cms_watchlist", part_cols=(), sort_cols=("user_id",)
-    )
+    return _atomic_write(top, out, part_cols=(), sort_cols=("user_id",))
 
 
 def load_cms_rollup(
@@ -1249,22 +1147,14 @@ def load_cms_rollup(
     p = _cms_dir(sf_dir, res_ms)
     if not (p / "_SUCCESS").exists():
         build_cms_rollup(spark, sf_dir, res_ms)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 def load_cms_watchlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _cms_watch_dir(sf_dir)
     if not (p / "_SUCCESS").exists():
         build_cms_watchlist(spark, sf_dir)
-    from dqe_spark.sources.store import session_load_memo
-
-    return session_load_memo(
-        spark, ("store", str(p)), lambda: spark.read.parquet(str(p))
-    )
+    return read_current(spark, p)
 
 
 def merge_cms_increment(
@@ -1287,8 +1177,6 @@ def merge_cms_increment(
     events source of record (then re-folds the in-hand increment).
     The check reads per-cell totals from the d=0 counter row (Σc over
     one hash row IS the cell's event count — no raw scan)."""
-    from dqe_spark.sources.store import invalidate_load_memo
-
     invalidate_load_memo()
     from dqe_spark.operators.sketches import (
         auto_cms_width,
@@ -1300,6 +1188,7 @@ def merge_cms_increment(
     if not (out / "_SUCCESS").exists():
         build_cms_rollup(spark, sf_dir, res_ms)
         return out
+    live = str(current(out))
     w = cms_width(sf_dir, res_ms)
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = cms_registers(
@@ -1309,7 +1198,7 @@ def merge_cms_increment(
         w=w,
     )
     touched = inc.select("event_type").distinct()
-    existing = spark.read.parquet(str(out)).join(
+    existing = spark.read.parquet(live).join(
         F.broadcast(touched), "event_type", "left_semi"
     )
     merged = cms_merge(
@@ -1338,7 +1227,7 @@ def merge_cms_increment(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_type")
-        .parquet(str(out))
+        .parquet(live)
     )
     return out
 
@@ -1400,7 +1289,7 @@ def portable_retention_1d(
     # serves through the barriers.
     memo_key = (
         spark.sparkContext.applicationId,
-        str(_pdistinct_dir(sf_dir, 3_600_000)),
+        str(current(_pdistinct_dir(sf_dir, 3_600_000))),
     )
     if checkpoint and memo_key in _DREG_MEMO:
         dreg, dest = _DREG_MEMO[memo_key]

@@ -35,15 +35,19 @@ the metastore):
     effect the per-metric directories give, without the directory
     explosion.
 
-Ingest is idempotent and atomic (write to tmp dir, rename into place),
-so concurrent readers either see the complete store or fall back to the
-view derivation — never a partial write.
+Every store in ``_store`` is written through one protocol, ``publish``
+(below): a build fills a new generation directory and swaps the
+store's link to it, so a reader never sees a half-replaced store.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import shutil
+import time
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,7 +65,7 @@ def _store_dir(sf_dir: str, layout: str = "metric") -> Path:
 
 def materialized_path(sf_dir: str, layout: str = "metric") -> Path | None:
     p = _store_dir(sf_dir, layout)
-    return p if (p / "_SUCCESS").exists() else None
+    return current(p) if (p / "_SUCCESS").exists() else None
 
 
 def ingest(
@@ -83,9 +87,6 @@ def ingest(
     out = _store_dir(sf_dir, layout)
     if not force and (out / "_SUCCESS").exists():
         return out
-    tmp = out.parent / f"_tmp_{_LAYOUT_DIRS[layout]}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
     df = _derive_metrics_view(spark, sf_dir)
     if layout == "metric":
         writer = (
@@ -104,18 +105,7 @@ def ingest(
             .write.mode("overwrite")
             .partitionBy("bucket", "dt")
         )
-    writer.parquet(str(tmp))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # lost a concurrent race: someone else finished first — use theirs
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(out, lambda gen: writer.parquet(str(gen)))
 
 
 def load(
@@ -182,8 +172,10 @@ BUCKETED_TARGET_ROWS = 4_000_000
 #: the OBJECT skips the relisting while the plan still shows the real
 #: store scan (serving-path guards keep working — nothing is
 #: checkpointed or cached here, only the analyzed relation reused).
-#: Keyed by applicationId so a new session never sees stale state;
-#: EVERY store mutation calls invalidate_load_memo().
+#: Keyed by applicationId so a new session never sees stale state, and
+#: by the resolved generation (``current``) so a rebuild by another
+#: process is a new key; EVERY store mutation in this process calls
+#: invalidate_load_memo().
 _LOAD_MEMO: dict[tuple, object] = {}
 
 
@@ -198,9 +190,114 @@ def session_load_memo(spark, key: tuple, build):
 
 def invalidate_load_memo() -> None:
     """Drop every memoized store load — called by every writer that
-    mutates a store directory (build, increment merge, TTL expire,
+    mutates a store directory (publish, increment merge, TTL expire,
     purge), coarse on purpose: correctness over warm latency."""
     _LOAD_MEMO.clear()
+
+
+def current(out: Path) -> Path | None:
+    """The generation directory the store at ``out`` publishes (a
+    legacy real directory is its own generation), or None when the
+    store is not built. Spark reads and in-place writes target this
+    path, never ``out``: a scan resolved through the link loses its
+    files when the link moves, and a static overwrite through the link
+    replaces the link itself with a plain directory."""
+    if out.is_symlink():
+        gen = out.parent / os.readlink(out)
+        return gen if gen.exists() else None
+    return out if out.exists() else None
+
+
+def publish(out: Path, write: Callable[[Path], object]) -> Path:
+    """Publish a new generation of the store at ``out``; returns ``out``.
+
+    The protocol every store and sink write goes through:
+
+    1. ``write(gen)`` fills a fresh sibling directory
+       ``<name>.gen-<ns>-<pid>`` with the parquet AND every sidecar
+       marker (``_B``, ``_BUCKETS``, ``_WIDTH``, ``_DDL``,
+       ``meta.json``), so markers and rows become visible together.
+    2. A symlink to ``gen`` is created under a temporary name and
+       ``os.replace``d onto ``out`` — one atomic rename(2): a reader
+       resolves either the old generation or the new one, never a
+       half-replaced or absent store. A crash anywhere before the
+       replace leaves the previous generation live.
+    3. The load memo is invalidated, and every other generation except
+       the one just replaced is deleted. The replaced one survives so a
+       DataFrame resolved against it (``current``) keeps collecting
+       across one republish; a generation named for another live
+       process is left to that process, which may still be writing it.
+
+    Each writer owns a uniquely named generation, so concurrent
+    rebuilds need no race handling: the last swap wins. A legacy real
+    directory at ``out`` is renamed to a generation name before the
+    swap (it is the generation being replaced)."""
+    out.parent.mkdir(parents=True, exist_ok=True)
+    gen = _new_generation(out)
+    write(gen)
+    prev = current(out)
+    if prev == out:
+        prev = _new_generation(out)
+        os.rename(out, prev)
+    link = gen.with_name(gen.name + ".link")
+    os.symlink(gen.name, link)
+    os.replace(link, out)
+    invalidate_load_memo()
+    keep = {gen.name, prev.name if prev else None}
+    for g in _generations(out):
+        if g.name not in keep and not _writer_alive(g):
+            _remove(g)
+    return out
+
+
+def drop(out: Path) -> None:
+    """Remove the store at ``out``: its link (or legacy directory) and
+    every generation. ``shutil.rmtree`` refuses the link — use this."""
+    if out.is_symlink() or out.exists():
+        _remove(out)
+    for g in _generations(out):
+        _remove(g)
+    invalidate_load_memo()
+
+
+def read_current(spark: SparkSession, out: Path) -> DataFrame:
+    """The store's current generation as a DataFrame, memoized per
+    generation: a rebuild — by this process or another — publishes a
+    new generation and so a new memo key, never a stale file index."""
+    gen = current(out)
+    return session_load_memo(
+        spark, ("store", str(gen)), lambda: spark.read.parquet(str(gen))
+    )
+
+
+def _new_generation(out: Path) -> Path:
+    return out.parent / f"{out.name}.gen-{time.time_ns():x}-{os.getpid()}"
+
+
+def _generations(out: Path) -> list[Path]:
+    return list(out.parent.glob(f"{glob.escape(out.name)}.gen-*"))
+
+
+def _writer_alive(gen: Path) -> bool:
+    """Whether another live process owns ``gen`` (its pid is in the
+    name): that writer may not have published it yet."""
+    m = re.search(r"\.gen-[0-9a-f]+-(\d+)", gen.name)
+    if m is None or int(m[1]) in (0, os.getpid()):
+        return False
+    try:
+        os.kill(int(m[1]), 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
+
+
+def _remove(p: Path) -> None:
+    if p.is_symlink():
+        p.unlink()
+    else:
+        shutil.rmtree(p, ignore_errors=True)
 
 
 def auto_buckets(
@@ -271,31 +368,36 @@ def ingest_bucketed(
     if not force and (out / "_SUCCESS").exists():
         _register_bucketed(spark, sf_dir)
         return table
-    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
     df = _derive_metrics_view(spark, sf_dir)
     if buckets is None:
         buckets = auto_buckets(
             df.count(), BUCKETED_TARGET_ROWS, lo=DEFAULT_BUCKETS
         )
-    (
-        df.repartition(buckets, "metric")
-        .write.format("parquet")
-        .bucketBy(buckets, "metric")
-        .sortBy("metric", "ts_ms")
-        .option("path", str(out))
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-    (out / "_BUCKETS").write_text(str(buckets))
+
+    def write(gen: Path) -> None:
+        (
+            df.repartition(buckets, "metric")
+            .write.format("parquet")
+            .bucketBy(buckets, "metric")
+            .sortBy("metric", "ts_ms")
+            .option("path", str(gen))
+            .mode("overwrite")
+            .saveAsTable(table)
+        )
+        # the catalog entry is re-registered against the PUBLISHED
+        # generation below, never left pointing at an unpublished one
+        spark.sql(f"DROP TABLE `{table}`")
+        (gen / "_BUCKETS").write_text(str(buckets))
+
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
+    publish(out, write)
+    _register_bucketed(spark, sf_dir)
     return table
 
 
 def _register_bucketed(spark: SparkSession, sf_dir: str) -> None:
-    """Replay the registration DDL for existing bucketed files into
-    this session's catalog (no-op if already registered)."""
+    """Replay the registration DDL for the published bucketed files
+    into this session's catalog (no-op if already registered)."""
     table = _bucketed_table(sf_dir)
     if spark.catalog.tableExists(table):
         return
@@ -303,7 +405,7 @@ def _register_bucketed(spark: SparkSession, sf_dir: str) -> None:
     spark.sql(
         f"CREATE TABLE `{table}` ({_BUCKETED_DDL_COLS}) USING parquet "
         f"CLUSTERED BY (metric) SORTED BY (metric, ts_ms) "
-        f"INTO {_n_buckets(out)} BUCKETS LOCATION '{out}'"
+        f"INTO {_n_buckets(out)} BUCKETS LOCATION '{current(out)}'"
     )
 
 
@@ -389,7 +491,8 @@ def compact(
     if not offenders:
         return []
     keys = {(b, dt) for b, dt, _ in offenders}
-    df = spark.read.parquet(str(out))
+    live = str(current(out))
+    df = spark.read.parquet(live)
     cond = None
     for b, dt in sorted(keys):
         c = (F.col("bucket") == b) & (F.col("dt") == dt)
@@ -404,7 +507,7 @@ def compact(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "dt")
-        .parquet(str(out))
+        .parquet(live)
     )
     return [str(d) for _, _, d in offenders]
 
@@ -439,26 +542,13 @@ def ingest_events(spark: SparkSession, sf_dir: str, force: bool = False) -> Path
     ev = _derive_events_view(spark, sf_dir).withColumn(
         "dt", F.date_format(F.timestamp_millis(F.col("ts_ms")), "yyyy-MM-dd")
     )
-    tmp = out.parent / f"_tmp_{EVENTS_DIRNAME}"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
+    writer = (
         ev.repartitionByRange("bucket", "dt", "event_type", "ts_ms")
         .sortWithinPartitions("bucket", "dt", "event_type", "ts_ms")
         .write.mode("overwrite")
         .partitionBy("bucket", "dt")
-        .parquet(str(tmp))
     )
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not (out / "_SUCCESS").exists():
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish(out, lambda gen: writer.parquet(str(gen)))
 
 
 def load_events_store(spark: SparkSession, sf_dir: str) -> DataFrame | None:
@@ -467,7 +557,7 @@ def load_events_store(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     p = _events_dir(sf_dir)
     if not (p / "_SUCCESS").exists():
         return None
-    df = spark.read.parquet(str(p))
+    df = spark.read.parquet(str(current(p)))
     return df.select(
         F.col("bucket").cast("string"),
         "ts_ms",
@@ -520,25 +610,28 @@ def ingest_bucketed_relation(
     if not force and (out / "_SUCCESS").exists():
         _register_relation(spark, sf_dir, name)
         return table
-    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    (
-        df.repartition(buckets, key)
-        .write.format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", str(out))
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
     ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     )
-    (out / "_BUCKETS").write_text(str(buckets))
-    (out / "_DDL").write_text(f"{ddl}\n{key}")
+
+    def write(gen: Path) -> None:
+        (
+            df.repartition(buckets, key)
+            .write.format("parquet")
+            .bucketBy(buckets, key)
+            .sortBy(key)
+            .option("path", str(gen))
+            .mode("overwrite")
+            .saveAsTable(table)
+        )
+        spark.sql(f"DROP TABLE `{table}`")  # re-registered once published
+        (gen / "_BUCKETS").write_text(str(buckets))
+        (gen / "_DDL").write_text(f"{ddl}\n{key}")
+
+    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
+    publish(out, write)
+    _register_relation(spark, sf_dir, name)
     return table
 
 
@@ -551,7 +644,7 @@ def _register_relation(spark: SparkSession, sf_dir: str, name: str) -> None:
     spark.sql(
         f"CREATE TABLE `{table}` ({ddl}) USING parquet "
         f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
-        f"INTO {_n_buckets(out)} BUCKETS LOCATION '{out}'"
+        f"INTO {_n_buckets(out)} BUCKETS LOCATION '{current(out)}'"
     )
 
 

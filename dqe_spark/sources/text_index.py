@@ -41,16 +41,14 @@ file.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 import zlib
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT
+from dqe_spark.sources.store import STORE_ROOT, current, publish
 
 N_BUCKETS_DEFAULT = 64
 
@@ -63,8 +61,9 @@ def _index_dir(sf_dir: str) -> Path:
 
 
 def index_path(sf_dir: str) -> Path | None:
+    """The index's current generation, or None when never built."""
     p = _index_dir(sf_dir)
-    return p if (p / "_SUCCESS").exists() else None
+    return current(p) if (p / "_SUCCESS").exists() else None
 
 
 def _n_buckets(p: Path) -> int:
@@ -118,7 +117,8 @@ def build_text_index(
     force: bool = False,
     docs: DataFrame | None = None,
 ) -> Path:
-    """Materialize the inverted index (idempotent, atomic tmp+rename).
+    """Materialize the inverted index (idempotent, published through
+    store.publish).
     ``docs`` overrides the corpus source (used by tests and bootstrap
     ingests); default is the sf_dir's documents table."""
     out = _index_dir(sf_dir)
@@ -126,7 +126,7 @@ def build_text_index(
         # layout upgrade: a pre-tf/pre-positions index (or one without
         # doc stats) rebuilds once from the corpus instead of silently
         # serving the old schema
-        cols = set(spark.read.parquet(str(out)).columns)
+        cols = set(spark.read.parquet(str(index_path(sf_dir))).columns)
         if {"tf", "positions"} <= cols and (
             out / "_docstats" / "_SUCCESS"
         ).exists():
@@ -142,30 +142,21 @@ def build_text_index(
     if docs is None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     postings = _postings(docs, n_buckets)
-    tmp = out.parent / "_tmp_text_index"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        postings.repartition("tb")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(str(tmp))
-    )
-    _docstats(docs).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp / "_docstats")
-    )
-    (tmp / "_BUCKETS").write_text(str(n_buckets))
-    if out.exists():
-        shutil.rmtree(out)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if index_path(sf_dir) is None:
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    def write(gen: Path) -> None:
+        (
+            postings.repartition("tb")
+            .sortWithinPartitions("token", "doc_id")
+            .write.mode("overwrite")
+            .partitionBy("tb")
+            .parquet(str(gen))
+        )
+        _docstats(docs).coalesce(1).write.mode("overwrite").parquet(
+            str(gen / "_docstats")
+        )
+        (gen / "_BUCKETS").write_text(str(n_buckets))
+
+    return publish(out, write)
 
 
 def merge_index_increment(
@@ -183,7 +174,7 @@ def merge_index_increment(
     changed-doc reindexing is a rebuild (or a doc-tombstone sweep), not
     this fast path."""
     build_text_index(spark, sf_dir, docs=new_docs)
-    p = _index_dir(sf_dir)
+    p = index_path(sf_dir)
     n = _n_buckets(p)
     inc = _postings(new_docs, n)
     touched = inc.select("tb").distinct()
@@ -215,7 +206,7 @@ def merge_index_increment(
         .localCheckpoint(eager=True)
     )
     ds.coalesce(1).write.mode("overwrite").parquet(str(ds_path))
-    return p
+    return _index_dir(sf_dir)
 
 
 def _bucket_of(term: str, n_buckets: int) -> int:
@@ -252,7 +243,7 @@ def keyword_search(
         norm.append(toks)
     flat = sorted({x for toks in norm for x in toks})
     build_text_index(spark, sf_dir)
-    p = _index_dir(sf_dir)
+    p = index_path(sf_dir)
     n = _n_buckets(p)
     idx = spark.read.parquet(str(p))
     pred = None
@@ -329,7 +320,7 @@ def bm25_search(
         raise ValueError(f"bad idf {idf!r}")
     flat = _norm_terms(terms)
     build_text_index(spark, sf_dir)
-    p = _index_dir(sf_dir)
+    p = index_path(sf_dir)
     n = _n_buckets(p)
     idx = spark.read.parquet(str(p))
     pred = None
@@ -422,7 +413,7 @@ def phrase_search(
         )
     uniq = sorted(set(toks))
     build_text_index(spark, sf_dir)
-    p = _index_dir(sf_dir)
+    p = index_path(sf_dir)
     n = _n_buckets(p)
     idx = spark.read.parquet(str(p))
     pred = None
@@ -460,7 +451,7 @@ def purge_doc_ids(
     the touched buckets, not the index; doc stats drop the ids too.
     Equals a rebuild from the filtered corpus, posting for posting
     (asserted in tests). ``doc_ids`` is a 1-column (doc_id) frame."""
-    p = _index_dir(sf_dir)
+    p = index_path(sf_dir)
     ids = F.broadcast(doc_ids.select("doc_id").distinct())
     idx = spark.read.parquet(str(p))
     touched = (
@@ -487,5 +478,5 @@ def purge_doc_ids(
         .localCheckpoint(eager=True)
     )
     ds.coalesce(1).write.mode("overwrite").parquet(str(ds_path))
-    return p
+    return _index_dir(sf_dir)
 

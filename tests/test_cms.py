@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dqe_spark.operators import sketches as SK
+from dqe_spark.sources.store import drop
 from tests.conftest import SF_SMOKE
 
 
@@ -129,8 +130,6 @@ def test_cms_increment_merge_equals_rebuild(spark, tmp_path):
     # record the full-corpus store, rebuild it from part A only,
     # merge part B through the increment path, compare, restore.
     R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True)
-    import shutil
-
     store = R._cms_dir(SF_SMOKE, 3_600_000)
     full = {
         (r["event_type"], r["wts"], r["d"], r["pos"]): r["c"]
@@ -139,7 +138,6 @@ def test_cms_increment_merge_equals_rebuild(spark, tmp_path):
     # rebuild from A by writing partials manually through the same API
     from dqe_spark.operators.sketches import cms_registers
 
-    shutil.rmtree(store)
     regs_a = cms_registers(
         part_a.select(
             "event_type",
@@ -149,9 +147,7 @@ def test_cms_increment_merge_equals_rebuild(spark, tmp_path):
         ["event_type", "wts"],
         "user_id",
     )
-    R._atomic_write(
-        regs_a, store, "_tmp_test_cms_a", part_cols=("event_type",)
-    )
+    R._atomic_write(regs_a, store, part_cols=("event_type",))
     R.merge_cms_increment(spark, part_b, SF_SMOKE, 3_600_000)
     merged = {
         (r["event_type"], r["wts"], r["d"], r["pos"]): r["c"]
@@ -245,8 +241,6 @@ def test_cms_oracle_replays_at_stored_width(spark, duck):
     """A store built at a non-floor width serves through its _WIDTH
     marker and the DuckDB oracle replays BIT-EXACT at that width —
     the migration contract's correctness half."""
-    import shutil
-
     from dqe_spark.operators.sketches import cms_merge, cms_probe
     from dqe_spark.sources import rollup as R
 
@@ -290,8 +284,8 @@ def test_cms_oracle_replays_at_stored_width(spark, duck):
     finally:
         if had:
             R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True)
-        elif store.exists():
-            shutil.rmtree(store)
+        else:
+            drop(store)
 
 
 def test_cms_width_migration_is_loud_and_rebuilds(spark, capsys, monkeypatch):
@@ -302,8 +296,6 @@ def test_cms_width_migration_is_loud_and_rebuilds(spark, capsys, monkeypatch):
     gram_store's rebucket this goes back to the events source + the
     in-hand increment — the single-increment-in-flight contract the
     docstring states.)"""
-    import shutil
-
     from dqe_spark.sources import rollup as R
     from dqe_spark.sources.metric_store import load_events
 
@@ -326,18 +318,16 @@ def test_cms_width_migration_is_loud_and_rebuilds(spark, capsys, monkeypatch):
         monkeypatch.undo()
         if had:
             R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True)
-        elif store.exists():
-            shutil.rmtree(store)
+        else:
+            drop(store)
 
 
 def test_expire_cms_preserves_width_marker(spark):
-    """TTL expiry rewrites the store via tmp+rename — the _WIDTH
+    """TTL expiry publishes a new generation — the _WIDTH
     marker MUST ride along (round-9 advisor, high): the kept rows were
     hashed at that width, and losing the marker would fall every later
     probe (and merge_cms_increment) back to the floor — silently wrong
     counter positions."""
-    import shutil
-
     from dqe_spark.sources import rollup as R
 
     W2 = 2 * SK.CMS_W
@@ -362,47 +352,8 @@ def test_expire_cms_preserves_width_marker(spark):
     finally:
         if had:
             R.build_cms_rollup(spark, SF_SMOKE, res, force=True)
-        elif store.exists():
-            shutil.rmtree(store)
-
-
-def test_build_cms_width_marker_rides_the_atomic_rename(spark, monkeypatch):
-    """_WIDTH is written INTO the tmp dir before the rename (the _B
-    pattern of build_dsir_model): a crash between rename and a
-    post-rename marker write could otherwise leave a _SUCCESS-complete
-    auto-width store that silently reads back at the floor."""
-    import os as _os
-    import shutil
-
-    from dqe_spark.sources import rollup as R
-
-    W2 = 2 * SK.CMS_W
-    store = R._cms_dir(SF_SMOKE, 3_600_000)
-    had = (store / "_SUCCESS").exists()
-    seen = {}
-    real = _os.rename
-
-    def spy(src, dst):
-        from pathlib import Path as _P
-
-        if _P(str(dst)) == store:
-            marker = _P(str(src)) / "_WIDTH"
-            seen["marker_in_tmp"] = (
-                marker.read_text() if marker.exists() else None
-            )
-        return real(src, dst)
-
-    try:
-        monkeypatch.setattr("os.rename", spy)
-        R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True, w=W2)
-        monkeypatch.undo()
-        assert seen.get("marker_in_tmp") == str(W2)
-    finally:
-        monkeypatch.undo()
-        if had:
-            R.build_cms_rollup(spark, SF_SMOKE, 3_600_000, force=True)
-        elif store.exists():
-            shutil.rmtree(store)
+        else:
+            drop(store)
 
 
 def test_cms_oracle_width_gate_is_loud(spark):

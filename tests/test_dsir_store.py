@@ -35,7 +35,7 @@ def test_store_served_selection_equals_inline(spark):
 def test_increment_merge_equals_full_rebuild(spark):
     """Model counts are additive: build from part A, merge part B
     through the increment path, equals the full-corpus build."""
-    import shutil
+    from dqe_spark.sources.store import publish
 
     docs = _docs(spark)
     part_a = docs.where(F.col("doc_id") % 3 != 0)
@@ -47,18 +47,17 @@ def test_increment_merge_equals_full_rebuild(spark):
             r["bucket"]: (r["ct"], r["cr"])
             for r in spark.read.parquet(str(store)).collect()
         }
-        # rebuild from A only (write through the same API surface)
-        shutil.rmtree(store)
+        # rebuild from A only (published through the same primitive)
         b = DS.DSIR_B
         model_a = T.dsir_model_counts(
             T.dsir_bucket_counts(part_a, F.col("lang") == "en", b)
         )
-        import os
 
-        tmp = store.parent / f"_tmp_{store.name}"
-        model_a.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        (tmp / "_B").write_text(str(b))
-        os.rename(tmp, store)
+        def seed(gen):
+            model_a.coalesce(1).write.mode("overwrite").parquet(str(gen))
+            (gen / "_B").write_text(str(b))
+
+        publish(store, seed)
         DS.merge_dsir_increment(spark, part_b, SF_SMOKE, "en")
         merged = {
             r["bucket"]: (r["ct"], r["cr"])
@@ -80,57 +79,6 @@ def test_load_is_memoized_and_invalidated(spark):
     b = DS.load_dsir_model(spark, SF_SMOKE, "en")
     assert b is not a
     ST.invalidate_load_memo()
-
-
-def test_increment_write_is_atomic_tmp_rename(spark, monkeypatch):
-    """merge_dsir_increment writes via tmp+_B+rename like the builder
-    (round-9 verdict #3 — it was the one in-place store overwrite in
-    the repo). The rename SOURCE already carries both the _B marker
-    and _SUCCESS, so a completed rename can never yield a marker-less
-    live store; a crash AT the rename leaves no half-written live dir
-    — the store is either the old model or absent, and the next load
-    rebuilds (the builders' shared crash contract)."""
-    import os as _os
-
-    docs = _docs(spark)
-    store = DS._dsir_dir(SF_SMOKE, "en")
-    DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
-    real = _os.rename
-    seen = {}
-
-    def crash(src, dst):
-        from pathlib import Path as _P
-
-        if _P(str(dst)) == store:
-            seen["marker"] = (_P(str(src)) / "_B").exists()
-            seen["success"] = (_P(str(src)) / "_SUCCESS").exists()
-            raise RuntimeError("simulated crash at rename")
-        return real(src, dst)
-
-    try:
-        monkeypatch.setattr("os.rename", crash)
-        import pytest
-
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            DS.merge_dsir_increment(
-                spark, docs.limit(5), SF_SMOKE, "en"
-            )
-    finally:
-        monkeypatch.undo()
-    # the rename source was complete (marker + _SUCCESS): a finished
-    # rename always lands marker and rows together
-    assert seen == {"marker": True, "success": True}
-    # no torn live store: either the old complete model or absent
-    assert not store.exists() or (
-        (store / "_SUCCESS").exists() and (store / "_B").exists()
-    )
-    # the next load self-repairs (rebuild if the crash removed it)
-    n = DS.load_dsir_model(spark, SF_SMOKE, "en").count()
-    assert 0 < n <= DS.DSIR_B
-    assert DS.dsir_b(SF_SMOKE, "en") == DS.DSIR_B
-    # and the interrupted merge replays cleanly (stale tmp is swept)
-    DS.merge_dsir_increment(spark, docs.limit(0), SF_SMOKE, "en")
-    assert DS.dsir_b(SF_SMOKE, "en") == DS.DSIR_B
 
 
 def test_selection_internally_consistent_at_B_and_2B(spark):

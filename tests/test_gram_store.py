@@ -284,9 +284,9 @@ def test_autoscale_rebucket_keeps_increment_cost_proportional(spark):
     )
     assert got_spans == want_spans and got_spans
 
-    import shutil
+    from dqe_spark.sources.store import drop
 
-    shutil.rmtree(p, ignore_errors=True)
+    drop(p)
 
 
 def test_expire_docs_before_equals_rebuild_from_filtered_corpus(spark):

@@ -228,9 +228,9 @@ def test_autoscale_rebucket_equals_fresh_build(spark):
     ).collect()
     assert any(r["new_id"] == base_max + 1 for r in hits)
 
-    import shutil
+    from dqe_spark.sources.store import drop
 
-    shutil.rmtree(p, ignore_errors=True)
+    drop(p)
 
 
 def test_expire_docs_before_equals_rebuild_from_filtered_corpus(spark):

@@ -91,7 +91,7 @@ def test_incremental_merge_equals_full_rebuild(spark, tmp_path):
     first, second = m.where(F.col("ts_ms") < cut), m.where(F.col("ts_ms") >= cut)
 
     # seed the store with the first half only, then merge the rest
-    R._atomic_write(R.point_partials(first, res), full_dir, "_tmp_inc_seed")
+    R._atomic_write(R.point_partials(first, res), full_dir)
     R.merge_rollup_increment(spark, second, sf, res)
 
     got = {
@@ -180,12 +180,9 @@ def test_distinct_increment_matches_full_rebuild(spark):
     )
 
     # rebuild from only the first half, then merge the second half
-    import shutil
-
     first = ev.where(F.col("ts_ms") < cut)
     second = ev.where(F.col("ts_ms") >= cut)
     out = R._distinct_dir(SF_SMOKE, 3_600_000)
-    shutil.rmtree(out)
     R._atomic_write(
         first.select(
             "event_type",
@@ -195,7 +192,6 @@ def test_distinct_increment_matches_full_rebuild(spark):
         .groupBy("event_type", "wts")
         .agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sketch")),
         out,
-        "_tmp_rollup_distinct_halftest",
         part_cols=("event_type",),
     )
     R.merge_distinct_increment(spark, second, SF_SMOKE, 3_600_000)
@@ -289,12 +285,9 @@ def test_portable_distinct_increment_matches_full_rebuild(spark):
         ).collect()
     )
 
-    import shutil
-
     first = ev.where(F.col("ts_ms") < cut)
     second = ev.where(F.col("ts_ms") >= cut)
     out = R._pdistinct_dir(SF_SMOKE, 3_600_000)
-    shutil.rmtree(out)
     R._atomic_write(
         SK.hll_pack(
             SK.hll_registers(
@@ -311,7 +304,6 @@ def test_portable_distinct_increment_matches_full_rebuild(spark):
             ["event_type", "wts"],
         ),
         out,
-        "_tmp_rollup_pdistinct_halftest",
         part_cols=("event_type",),
     )
     R.merge_portable_distinct_increment(spark, second, SF_SMOKE, 3_600_000)
@@ -453,7 +445,7 @@ def test_ladder_increments_equal_full_rebuild(spark):
                 )
                 .groupBy("bucket", "metric", "wts", "v100")
                 .agg(F.count("*").alias("cnt")),
-                R._hist_dir(sf, res), "_tmp_inc_seed_h",
+                R._hist_dir(sf, res),
                 sort_cols=("wts", "v100"),
             ),
         ),
@@ -463,7 +455,7 @@ def test_ladder_increments_equal_full_rebuild(spark):
              "sum_sq", "min", "max", "sum_conf"),
             lambda pts: R._atomic_write(
                 R.point_partials(pts, res, dims=R.TAGGED_DIMS),
-                R._tagged_dir(sf, res), "_tmp_inc_seed_t",
+                R._tagged_dir(sf, res),
             ),
         ),
         (
@@ -478,7 +470,7 @@ def test_ladder_increments_equal_full_rebuild(spark):
                 )
                 .groupBy("bucket", "metric", *R.TAGGED_DIMS, "wts", "v100")
                 .agg(F.count("*").alias("cnt")),
-                R._tagged_hist_dir(sf, res), "_tmp_inc_seed_th",
+                R._tagged_hist_dir(sf, res),
                 sort_cols=("wts", "v100"),
             ),
         ),

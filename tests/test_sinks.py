@@ -59,14 +59,18 @@ def test_write_result_partitioned_and_sorted(spark, tmp_path):
 
 def test_write_result_atomic_replace(spark, tmp_path):
     from dqe_spark import sinks
+    from dqe_spark.sources.store import current
 
     df1 = spark.range(10).withColumnRenamed("id", "x")
     df2 = spark.range(5).withColumnRenamed("id", "x")
     p = sinks.write_result(df1, str(tmp_path / "r"))
     assert spark.read.parquet(p).count() == 10
+    first = current(Path(p))
     sinks.write_result(df2, str(tmp_path / "r"))
     assert spark.read.parquet(p).count() == 5
-    assert not (tmp_path / "_tmp_r").exists()
+    # no unpublished generation is left behind: only the live one and
+    # the one it replaced
+    assert set(tmp_path.glob("r.gen-*")) == {first, current(Path(p))}
 
 
 def test_export_named_results(spark, tmp_path):

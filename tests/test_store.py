@@ -77,8 +77,6 @@ def test_date_layout_parity_and_pruning(spark):
     derivation, (b) turn a DQL time range into dt PARTITION pruning via
     the compiler's restated predicate, and (c) answer a windowed query
     identically to the default layout."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from dqe_spark import engine
@@ -129,7 +127,7 @@ def test_date_layout_parity_and_pruning(spark):
             map(tuple, want.df.collect())
         )
     finally:
-        shutil.rmtree(p, ignore_errors=True)
+        store.drop(p)
 
 
 def test_salted_agg_equals_plain(spark):
@@ -280,8 +278,6 @@ def test_compact_rewrites_fragmented_partitions_only(spark):
 def test_events_store_parity_and_pruning(spark):
     """Materialized event store: row-identical to the view derivation;
     a DQL events query's time bound becomes dt PartitionFilters."""
-    import shutil
-
     from dqe_spark import engine
     from dqe_spark.sources import store
     from dqe_spark.sources.metric_store import _derive_events_view, load_events
@@ -308,7 +304,7 @@ def test_events_store_parity_and_pruning(spark):
         assert "dt" in pf
         assert res.df.count() > 0
     finally:
-        shutil.rmtree(out, ignore_errors=True)  # other tests expect view path
+        store.drop(out)  # other tests expect view path
 
 
 def test_lifecycle_applies_to_events_store(spark):
@@ -348,9 +344,7 @@ def test_lifecycle_applies_to_events_store(spark):
         assert len(list(tgt.glob("*.parquet"))) == 1
         assert spark.read.parquet(str(tgt)).count() == n
     finally:
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)  # other tests expect view path
+        store.drop(out)  # other tests expect view path
 
 
 def test_bucketed_relation_colocated_join(spark):

@@ -788,9 +788,9 @@ def test_stream_dsir_model_matches_batch_build(spark):
         assert model_counts() == want
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        import shutil as _sh
+        from dqe_spark.sources.store import drop
 
-        _sh.rmtree(DS._stream_dir(SF_SMOKE, "en"), ignore_errors=True)
+        drop(DS._stream_dir(SF_SMOKE, "en"))
         DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)  # restore
 
 

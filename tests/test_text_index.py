@@ -160,18 +160,17 @@ def test_old_layout_index_upgrades_once(spark):
     """A pre-tf index (no tf column, no _docstats) rebuilds from the
     corpus on next use; an INCREMENT against it fails loudly instead of
     rebuilding from the new docs alone (which would drop history)."""
-    import shutil
-
     import pytest
 
     from dqe_spark.sources import text_index as TI
+    from dqe_spark.sources.store import drop
 
     TI.build_text_index(spark, SF_SMOKE, force=True)
     p = TI._index_dir(SF_SMOKE)
     # forge the old layout: strip tf from the postings, drop _docstats
     old = spark.read.parquet(str(p)).select("doc_id", "token", "tb").collect()
     old_df = spark.createDataFrame(old, "doc_id long, token string, tb int")
-    shutil.rmtree(p)
+    drop(p)  # the forged index is a legacy real directory
     (
         old_df.repartition("tb")
         .write.mode("overwrite")
