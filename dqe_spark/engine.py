@@ -23,20 +23,13 @@ from dqe_spark.sources.metric_store import (
 )
 
 
-#: registered-store DataFrame memo for plan(): parquet DataFrame
-#: creation pays a file listing + schema read per store, which
-#: dominates plan latency for short queries once four stores are
-#: registered. Keyed by each store's _SUCCESS mtime so any rebuild
-#: (tests force-rebuild constantly) invalidates the entry.
-_STORE_MEMO: dict = {}
-
-
 def _rollup_stores(spark: SparkSession, sf_dir: str):
+    """The rollup levels the DQL rewrite reads. Each load is memoised
+    per generation (store.read_current), and every store write or
+    mutation publishes a new generation, so a change by this or any
+    other process is a new memo key; the cascade rebuilds the 1h
+    levels when their 1m source has moved on."""
     from dqe_spark.sources.rollup import (
-        _hist_dir,
-        _rollup_dir,
-        _tagged_dir,
-        _tagged_hist_dir,
         cascade_rollup,
         load_hist_rollup,
         load_rollup,
@@ -45,35 +38,18 @@ def _rollup_stores(spark: SparkSession, sf_dir: str):
     )
 
     cascade_rollup(spark, sf_dir, 60_000, 3_600_000)
-    paths = (
-        _rollup_dir(sf_dir, 60_000),
-        _rollup_dir(sf_dir, 3_600_000),
-        _hist_dir(sf_dir, 60_000),
-        _tagged_dir(sf_dir, 60_000),
-        _tagged_dir(sf_dir, 3_600_000),
-        _tagged_hist_dir(sf_dir, 60_000),
+    return (
+        {
+            60_000: load_rollup(spark, sf_dir, 60_000),
+            3_600_000: load_rollup(spark, sf_dir, 3_600_000),
+        },
+        {60_000: load_hist_rollup(spark, sf_dir, 60_000)},
+        {
+            60_000: load_tagged_rollup(spark, sf_dir, 60_000),
+            3_600_000: load_tagged_rollup(spark, sf_dir, 3_600_000),
+        },
+        {60_000: load_tagged_hist_rollup(spark, sf_dir, 60_000)},
     )
-    stamp = tuple(
-        (p / "_SUCCESS").stat().st_mtime_ns if (p / "_SUCCESS").exists() else -1
-        for p in paths
-    )
-    key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    if key not in _STORE_MEMO:
-        if len(_STORE_MEMO) > 16:
-            _STORE_MEMO.clear()
-        _STORE_MEMO[key] = (
-            {
-                60_000: load_rollup(spark, sf_dir, 60_000),
-                3_600_000: load_rollup(spark, sf_dir, 3_600_000),
-            },
-            {60_000: load_hist_rollup(spark, sf_dir, 60_000)},
-            {
-                60_000: load_tagged_rollup(spark, sf_dir, 60_000),
-                3_600_000: load_tagged_rollup(spark, sf_dir, 3_600_000),
-            },
-            {60_000: load_tagged_hist_rollup(spark, sf_dir, 60_000)},
-        )
-    return _STORE_MEMO[key]
 
 
 def plan(

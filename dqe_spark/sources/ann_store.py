@@ -33,7 +33,6 @@ alternative (separate vector store + join) pays a shuffle per query.
 from __future__ import annotations
 
 import json
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,8 +41,8 @@ from pyspark.sql import functions as F
 from dqe_spark.sources.store import (
     STORE_ROOT,
     current,
-    invalidate_load_memo,
     publish,
+    publish_replacing,
     session_load_memo,
 )
 
@@ -138,12 +137,10 @@ def merge_ann_increment(
     assign + encode + rewrite of only the touched cell partitions.
 
     Upsert semantics by ``id_col`` (a re-landed id replaces its old
-    row). Dynamic partition overwrite replaces exactly the affected
-    ``cell=`` directories; the merged frame is localCheckpoint'ed
-    first so the write doesn't read from the path it overwrites. This
-    mirrors rollup.merge_rollup_increment — at 100 TB a nightly vector
+    row). The touched ``cell=`` partitions are rewritten in a new
+    generation (_replace_cells). This mirrors
+    rollup.merge_rollup_increment — at 100 TB a nightly vector
     backfill costs proportional to the new data, not the index."""
-    invalidate_load_memo()
     from dqe_spark.operators import similarity as S
 
     ingest_ann(spark, sf_dir)
@@ -170,35 +167,36 @@ def merge_ann_increment(
     existing = idx0.where(F.col("cell").isin(touched)).join(
         F.broadcast(inc.select(id_col)), id_col, "left_anti"
     )
-    merged = (
-        existing.unionByName(inc.select(*existing.columns))
-        .localCheckpoint(eager=True)
-    )
-    (
-        merged.repartition("cell")
+    merged = existing.unionByName(inc.select(*existing.columns))
+    return _replace_cells(sf_dir, touched, merged, id_col)
+
+
+def _replace_cells(
+    sf_dir: str, touched: list[int], rows: DataFrame, id_col: str
+) -> Path:
+    """Publish ``rows`` as the new content of the ``touched`` cells
+    (store.publish_replacing): a touched cell left without rows — an
+    upsert moved its only occupant, or a purge emptied it — is absent,
+    and every other cell plus ``meta.json`` is carried by hardlink."""
+    writer = (
+        rows.repartition("cell")
         .sortWithinPartitions("cell", id_col)
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell")
-        .parquet(str(p / "index"))
     )
-    # dynamic overwrite skips partitions with no output rows: an upsert
-    # that MOVES a cell's only occupant elsewhere must still clear the
-    # old cell dir or its stale row keeps being served (same hole as
-    # minhash_store.merge_minhash_increment)
-    present = {r["cell"] for r in merged.select("cell").distinct().collect()}
-    for c in touched:
-        if c not in present:
-            shutil.rmtree(p / "index" / f"cell={c}", ignore_errors=True)
-    spark.catalog.refreshByPath(str(p / "index"))
-    return _ann_dir(sf_dir)
+    return publish_replacing(
+        _ann_dir(sf_dir),
+        [f"index/cell={c}" for c in touched],
+        lambda gen: writer.parquet(str(gen / "index")),
+    )
 
 
 def load_ann(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict] | None:
     """(index DataFrame, meta) if the index is built, else None.
     Memoized per session: re-listing the index files + re-reading the
     centroid/codebook meta per serve was most of a warm serve's wall
-    (see store.session_load_memo); every writer below invalidates."""
+    (see store.session_load_memo), keyed by the generation every
+    writer below publishes."""
     p = ann_path(sf_dir)
     if p is None:
         return None
@@ -308,11 +306,10 @@ def purge_vector_ids(
 ) -> Path:
     """Remove vectors from the materialized index (the takedown sweep,
     mirroring text_index/minhash_store.purge_doc_ids): only the cells
-    holding a purged id rewrite, via dynamic partition overwrite; the
+    holding a purged id rewrite (_replace_cells); the
     centroids/codebooks are untouched (they are trained artifacts, not
     per-vector state). A purged vector can no longer be served by any
     probe."""
-    invalidate_load_memo()
     p = ann_path(sf_dir)
     if p is None:
         raise FileNotFoundError(f"no ANN index under {_ann_dir(sf_dir)}")
@@ -327,26 +324,7 @@ def purge_vector_ids(
         .distinct()
         .collect()
     )  # driver-side, bounded by n_clusters
-    kept = (
-        idx.where(F.col("cell").isin(touched))
-        .join(ids_b, id_col, "left_anti")
-        .localCheckpoint(eager=True)
+    kept = idx.where(F.col("cell").isin(touched)).join(
+        ids_b, id_col, "left_anti"
     )
-    (
-        kept.repartition("cell")
-        .sortWithinPartitions("cell", id_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(str(p / "index"))
-    )
-    # purging a cell's entire population yields no output partition —
-    # dynamic overwrite would skip it and keep serving the purged rows;
-    # clear such cells explicitly (same hole as minhash_store)
-    present = {r["cell"] for r in kept.select("cell").distinct().collect()}
-    for c in touched:
-        if c not in present:
-            shutil.rmtree(p / "index" / f"cell={c}", ignore_errors=True)
-    # rewritten files replace the session's cached listing for the path
-    spark.catalog.refreshByPath(str(p / "index"))
-    return _ann_dir(sf_dir)
+    return _replace_cells(sf_dir, touched, kept, id_col)

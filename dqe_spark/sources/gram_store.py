@@ -21,9 +21,11 @@ Layout (same conventions as the minhash/text-index/rollup stores):
     actually on disk. The probe joins on (gb, gram); with a small
     increment, dynamic partition pruning reads only the buckets the
     new documents' grams hash to.
-  * increments append via touched-bucket dynamic partition overwrite
-    with last-write-wins per doc_id (a re-landed changed doc leaves
-    no stale grams). When growth pushes the auto size past the
+  * increments, purges and TTL rewrite only the touched buckets, in a
+    new generation (store.publish_replacing: bytes rewritten ∝ the
+    touched buckets, plus one hardlink per carried file), with
+    last-write-wins per doc_id (a re-landed changed doc leaves no
+    stale grams). When growth pushes the auto size past the
     stored layout, the merge re-buckets FIRST (rebucket_gram_store —
     a loud, full, but log-amortized rewrite: counts double, so it
     happens O(log growth) times) and the increment itself stays
@@ -36,7 +38,6 @@ Hashing is the positional-md5 scheme from operators/dedup.py
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +45,13 @@ from pyspark.sql import functions as F
 
 from dqe_spark.operators.dedup import merge_position_islands, positional_grams
 from dqe_spark.operators.partitioning import spread
-from dqe_spark.sources.store import STORE_ROOT, auto_buckets, current, publish
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    auto_buckets,
+    current,
+    publish,
+    publish_replacing,
+)
 
 K_GRAM = 5
 #: floor of the auto-sized layout (also the legacy fixed count — a
@@ -83,7 +90,7 @@ def _grams_of(
     )
 
 
-def _write_layout(df: DataFrame, dest: Path, n_buckets: int) -> None:
+def _write_buckets(df: DataFrame, dest: Path) -> None:
     (
         df.repartition("gb")
         .sortWithinPartitions("gram", "doc_id", "p")
@@ -91,7 +98,20 @@ def _write_layout(df: DataFrame, dest: Path, n_buckets: int) -> None:
         .partitionBy("gb")
         .parquet(str(dest))
     )
+
+
+def _write_layout(df: DataFrame, dest: Path, n_buckets: int) -> None:
+    _write_buckets(df, dest)
     (dest / "_BUCKETS").write_text(str(n_buckets))
+
+
+def _replace_buckets(p: Path, touched: list[int], rows: DataFrame) -> Path:
+    """Publish ``rows`` as the new content of the ``touched`` buckets
+    (store.publish_replacing): a touched bucket left without rows is
+    absent, every other bucket is carried by hardlink."""
+    return publish_replacing(
+        p, [f"gb={b}" for b in touched], lambda gen: _write_buckets(rows, gen)
+    )
 
 
 def build_gram_store(
@@ -180,7 +200,8 @@ def merge_gram_increment(
     old rows of re-landed docs anti-joined out, rewrite touches only
     the buckets the new keys hash to ∪ the re-landed docs' old
     buckets; the touched-bucket list is driver-sized by the INCREMENT,
-    never by the store — each new gram maps to one bucket).
+    never by the store — each new gram maps to one bucket). Published
+    as a new generation (_replace_buckets).
 
     Growth check first: if the merged size pushes auto_buckets past
     the stored layout, re-bucket BEFORE merging (loud full rewrite,
@@ -205,8 +226,7 @@ def merge_gram_increment(
     nb = _n_buckets(p)
     inc = _grams_of(spread(new_docs), k, nb)
     new_ids = new_docs.select("doc_id").distinct()
-    live = current(p)
-    stored = spark.read.parquet(str(live))
+    stored = spark.read.parquet(str(current(p)))
     stale_gb = stored.join(F.broadcast(new_ids), "doc_id", "left_semi").select(
         "gb"
     )
@@ -218,27 +238,9 @@ def merge_gram_increment(
         F.broadcast(new_ids), "doc_id", "left_anti"
     )
     merged = (
-        existing.select("doc_id", "p", "gram", "gb")
-        .unionByName(inc)
-        .distinct()
-        .localCheckpoint(eager=True)
+        existing.select("doc_id", "p", "gram", "gb").unionByName(inc).distinct()
     )
-    (
-        merged.repartition("gb")
-        .sortWithinPartitions("gram", "doc_id", "p")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gb")
-        .parquet(str(live))
-    )
-    # dynamic overwrite cannot vacate a bucket whose merged frame is
-    # empty — delete those explicitly (same hole the minhash store
-    # closes; merged is checkpointed so nothing re-reads stale files)
-    present = {r["gb"] for r in merged.select("gb").distinct().collect()}
-    for b in touched_gb:
-        if b not in present:
-            shutil.rmtree(live / f"gb={b}", ignore_errors=True)
-    return p
+    return _replace_buckets(p, touched_gb, merged)
 
 
 def spans_against_store(
@@ -274,34 +276,17 @@ def spans_against_store(
 
 def _drop_rows_where(spark: SparkSession, p: Path, gone) -> Path:
     """Shared rewrite for purge and TTL: remove rows matching ``gone``,
-    touching only the buckets that actually hold such rows (dynamic
-    partition overwrite); buckets left empty are unlinked so the store
-    equals a rebuild from the filtered corpus."""
-    live = current(p)
-    stored = spark.read.parquet(str(live))
+    touching only the buckets that actually hold such rows
+    (_replace_buckets), so the store equals a rebuild from the
+    filtered corpus."""
+    stored = spark.read.parquet(str(current(p)))
     touched = sorted(
         r["gb"] for r in stored.where(gone).select("gb").distinct().collect()
     )
     if not touched:
         return p
-    kept = (
-        stored.where(F.col("gb").isin(touched))
-        .where(~gone)
-        .localCheckpoint(eager=True)
-    )
-    (
-        kept.repartition("gb")
-        .sortWithinPartitions("gram", "doc_id", "p")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gb")
-        .parquet(str(live))
-    )
-    present = {r["gb"] for r in kept.select("gb").distinct().collect()}
-    for b in touched:
-        if b not in present:
-            shutil.rmtree(live / f"gb={b}", ignore_errors=True)
-    return p
+    kept = stored.where(F.col("gb").isin(touched)).where(~gone)
+    return _replace_buckets(p, touched, kept)
 
 
 def purge_doc_ids(
@@ -330,7 +315,7 @@ def expire_docs_before(
     ladders already have (rollup.expire_rollup_before; round-7 verdict
     #6). Documents carry no timestamp, so retention is expressed on
     the landing order: every gram row of doc_id < cutoff is dropped.
-    Same touched-partition dynamic-overwrite contract as purge —
+    Same touched-bucket rewrite as purge —
     post-TTL store == rebuild from the age-filtered corpus (pinned in
     tests/test_gram_store.py). Grams hash uniformly, so an age-out
     usually touches every bucket — that is the design point shared

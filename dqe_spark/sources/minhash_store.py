@@ -25,8 +25,11 @@ Layout (same conventions as the text index / rollup stores):
   * ``_shingles`` backs exact Jaccard verification of candidates —
     only candidate doc_ids are ever fetched (semi-join sized by the
     candidate set, not the corpus).
-  * increments append via touched-bucket dynamic partition overwrite;
-    re-landing an unchanged doc is absorbed by distinct.
+  * increments and purges rewrite only the touched buckets and the
+    shingle sidecar, in a new generation (store.publish_replacing:
+    bytes rewritten ∝ the touched buckets plus the sidecar, one
+    hardlink per carried file); re-landing an unchanged doc is
+    absorbed by distinct.
 
 Hashing is the md5-derived scheme from operators/dedup.py, so the
 DuckDB oracle replays the full pipeline (`dedup_minhash_incr`).
@@ -34,7 +37,6 @@ DuckDB oracle replays the full pipeline (`dedup_minhash_incr`).
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +50,13 @@ from dqe_spark.operators.dedup import (
     shingle_sets,
 )
 from dqe_spark.operators.partitioning import spread
-from dqe_spark.sources.store import STORE_ROOT, auto_buckets, current, publish
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    auto_buckets,
+    current,
+    publish,
+    publish_replacing,
+)
 
 #: floor of the auto-sized layout (also the legacy fixed count — a
 #: pre-marker store on disk reads back as 64).
@@ -100,7 +108,7 @@ def _bands_of(
     )
 
 
-def _write_layout(bands: DataFrame, dest: Path, n_buckets: int) -> None:
+def _write_buckets(bands: DataFrame, dest: Path) -> None:
     (
         bands.repartition("bb")
         .sortWithinPartitions("key", "doc_id")
@@ -108,7 +116,27 @@ def _write_layout(bands: DataFrame, dest: Path, n_buckets: int) -> None:
         .partitionBy("bb")
         .parquet(str(dest))
     )
+
+
+def _write_layout(bands: DataFrame, dest: Path, n_buckets: int) -> None:
+    _write_buckets(bands, dest)
     (dest / "_BUCKETS").write_text(str(n_buckets))
+
+
+def _replace_buckets(
+    p: Path, touched: list[int], bands: DataFrame, shingles: DataFrame
+) -> Path:
+    """Publish ``bands`` as the new content of the ``touched`` buckets
+    and ``shingles`` as the new sidecar (store.publish_replacing): a
+    touched bucket left without rows is absent — a purged or moved doc
+    can never surface from it — and every other bucket is carried by
+    hardlink."""
+
+    def write(gen: Path) -> None:
+        _write_buckets(bands, gen)
+        shingles.write.mode("overwrite").parquet(str(gen / "_shingles"))
+
+    return publish_replacing(p, [f"bb={b}" for b in touched], write)
 
 
 def build_minhash_store(
@@ -175,13 +203,13 @@ def rebucket_minhash_store(
             "bb", F.pmod(F.crc32(F.col("key")), F.lit(n_buckets)).cast("int")
         )
     )
-
-    def write(gen: Path) -> None:
-        _write_layout(rekeyed, gen, n_buckets)
-        # carry the sidecar over (it is bucket-agnostic)
-        shutil.copytree(live / "_shingles", gen / "_shingles")
-
-    return publish(p, write)
+    # every old bucket is replaced; the bucket-agnostic shingle sidecar
+    # is carried by hardlink
+    return publish_replacing(
+        p,
+        [d.name for d in live.glob("bb=*")],
+        lambda gen: _write_layout(rekeyed, gen, n_buckets),
+    )
 
 
 def merge_minhash_increment(
@@ -201,9 +229,9 @@ def merge_minhash_increment(
     Cost shape: finding the old rows' buckets needs one column-pruned
     (doc_id, bb) scan of the band store — read-proportional but
     map-only; the REWRITE is still only the touched buckets (new keys'
-    buckets ∪ re-landed docs' old buckets) via dynamic partition
-    overwrite. Increments are small by contract, so the incoming
-    doc_id set broadcasts.
+    buckets ∪ re-landed docs' old buckets) plus the shingle sidecar,
+    published as a new generation (_replace_buckets). Increments are
+    small by contract, so the incoming doc_id set broadcasts.
 
     Growth check first: if the merged size pushes auto_buckets past
     the stored layout, re-bucket BEFORE merging (loud full rewrite,
@@ -239,39 +267,15 @@ def merge_minhash_increment(
         F.broadcast(new_ids), "doc_id", "left_anti"
     )
     merged = (
-        existing.select("doc_id", "band", "key", "bb")
-        .unionByName(inc)
-        .distinct()
-        .localCheckpoint(eager=True)
+        existing.select("doc_id", "band", "key", "bb").unionByName(inc).distinct()
     )
-    (
-        merged.repartition("bb")
-        .sortWithinPartitions("key", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bb")
-        .parquet(str(live))
-    )
-    # Dynamic partition overwrite only rewrites partitions PRESENT in
-    # the output: a touched bucket whose merged frame has zero rows
-    # (the re-landed doc was its only occupant and the new text hashes
-    # elsewhere) would otherwise keep its stale band keys on disk —
-    # breaking the equals-rebuild contract. Delete those explicitly
-    # (merged is checkpointed, so nothing re-reads the stale files).
-    present = {r["bb"] for r in merged.select("bb").distinct().collect()}
-    for b in touched_bb:
-        if b not in present:
-            shutil.rmtree(live / f"bb={b}", ignore_errors=True)
-    sh_path = live / "_shingles"
     sh = (
-        spark.read.parquet(str(sh_path))
+        spark.read.parquet(str(live / "_shingles"))
         .join(F.broadcast(new_ids), "doc_id", "left_anti")
         .unionByName(shingle_sets(spread(new_docs)))
         .dropDuplicates(["doc_id"])
-        .localCheckpoint(eager=True)
     )
-    sh.write.mode("overwrite").parquet(str(sh_path))
-    return p
+    return _replace_buckets(p, touched_bb, merged, sh)
 
 
 def neardup_against_store(
@@ -336,8 +340,8 @@ def purge_doc_ids(
     """Remove documents from the signature store (the takedown sweep,
     mirroring text_index.purge_doc_ids): touched bb buckets rewrite
     without the purged docs' band keys; the shingle sidecar drops them
-    too. A purged doc can never again appear as a candidate OR as
-    verification evidence."""
+    too (_replace_buckets). A purged doc can never again appear as a
+    candidate OR as verification evidence."""
     p = _store_dir(sf_dir, variant)
     live = current(p)
     ids = F.broadcast(doc_ids.select("doc_id").distinct())
@@ -353,32 +357,11 @@ def purge_doc_ids(
         bands.where(F.col("bb").isin(touched_bb))
         .join(ids, "doc_id", "left_anti")
         .select("doc_id", "band", "key", "bb")
-        .localCheckpoint(eager=True)
     )
-    (
-        kept.repartition("bb")
-        .sortWithinPartitions("key", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bb")
-        .parquet(str(live))
+    sh = spark.read.parquet(str(live / "_shingles")).join(
+        ids, "doc_id", "left_anti"
     )
-    # same empty-touched-bucket hole as merge_minhash_increment: a
-    # bucket fully occupied by purged docs yields no output partition,
-    # so dynamic overwrite never rewrites it — delete it explicitly or
-    # the purged doc could still surface as a candidate
-    present = {r["bb"] for r in kept.select("bb").distinct().collect()}
-    for b in touched_bb:
-        if b not in present:
-            shutil.rmtree(live / f"bb={b}", ignore_errors=True)
-    sh_path = live / "_shingles"
-    sh = (
-        spark.read.parquet(str(sh_path))
-        .join(ids, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    sh.write.mode("overwrite").parquet(str(sh_path))
-    return p
+    return _replace_buckets(p, touched_bb, kept, sh)
 
 
 def expire_docs_before(

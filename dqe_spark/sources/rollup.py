@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from dqe_spark.sources.store import (
     STORE_ROOT,
     current,
-    invalidate_load_memo,
     publish,
+    publish_replacing,
     read_current,
     session_load_memo,
 )
@@ -93,14 +93,7 @@ def _atomic_write(
     store whose marker is missing — a store whose rows were hashed at
     a non-default layout but whose marker fell back to the default
     reads garbage positions silently."""
-    laid = (
-        partials.repartition(*part_cols)
-        if part_cols
-        else partials.coalesce(1)
-    ).sortWithinPartitions(*sort_cols)
-    writer = laid.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
+    writer = _laid_out(partials, part_cols, sort_cols)
 
     def write(gen: Path) -> None:
         writer.parquet(str(gen))
@@ -108,6 +101,59 @@ def _atomic_write(
             (gen / name).write_text(value)
 
     return publish(out, write)
+
+
+def _laid_out(
+    partials: DataFrame, part_cols: tuple[str, ...], sort_cols: tuple[str, ...]
+):
+    """The writer of every ladder store: one task per partition, rows
+    sorted within it."""
+    laid = (
+        partials.repartition(*part_cols)
+        if part_cols
+        else partials.coalesce(1)
+    ).sortWithinPartitions(*sort_cols)
+    writer = laid.write.mode("overwrite")
+    return writer.partitionBy(*part_cols) if part_cols else writer
+
+
+def _touched_rows(
+    spark: SparkSession, out: Path, inc: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The live generation's rows in the partitions ``inc`` touches."""
+    return spark.read.parquet(str(current(out))).join(
+        F.broadcast(inc.select(*keys).distinct()), keys, "left_semi"
+    )
+
+
+def _publish_merged(
+    out: Path,
+    merged: DataFrame,
+    part_cols: tuple[str, ...] = ("bucket", "metric"),
+    sort_cols: tuple[str, ...] = ("wts",),
+) -> Path:
+    """Publish ``merged`` — existing ∪ increment, re-aggregated, for
+    every partition the increment touches — as a new generation of
+    ``out`` (store.publish_replacing, whose docstring states the
+    cost). No partition is named as replaced: each touched one holds
+    at least the increment's rows, so ``merged`` rewrites all of them
+    and every untouched partition is carried by hardlink."""
+    writer = _laid_out(merged, part_cols, sort_cols)
+    return publish_replacing(out, (), lambda gen: writer.parquet(str(gen)))
+
+
+def _partial_aggs() -> list[Column]:
+    """Re-aggregation of the plain partials — the one definition the
+    increment merges and the cascades share (cnt/sums add, min/max
+    fold)."""
+    return [
+        F.sum("cnt").alias("cnt"),
+        F.sum("sum").alias("sum"),
+        F.sum("sum_sq").alias("sum_sq"),
+        F.min("min").alias("min"),
+        F.max("max").alias("max"),
+        F.sum("sum_conf").alias("sum_conf"),
+    ]
 
 
 def _sidecar_markers(store: Path) -> dict[str, str]:
@@ -160,48 +206,18 @@ def merge_rollup_increment(
     (bucket, metric) partitions the increment touches — at 100 TB an
     hourly backfill costs proportional to the new data, not the store.
 
-    Dynamic partition overwrite replaces exactly the affected
-    directories; the merged frame is localCheckpoint'ed first so the
-    write doesn't read from the path it overwrites. This is the batch
-    twin of streaming.stream_rollup_partials (late/backfill data beyond
-    the stream's watermark lands here)."""
-    invalidate_load_memo()
+    Published as a new generation by _merge_touched_partitions. This
+    is the batch twin of streaming.stream_rollup_partials (late/backfill
+    data beyond the stream's watermark lands here)."""
     out = _rollup_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         build_rollup(spark, sf_dir, res_ms)
         return out
-    live = str(current(out))
-    inc = point_partials(new_points, res_ms)
-    affected = inc.select("bucket", "metric").distinct()
-    existing = spark.read.parquet(live).join(
-        F.broadcast(affected), ["bucket", "metric"], "left_semi"
+    return _merge_touched_partitions(
+        spark, out, point_partials(new_points, res_ms),
+        ["bucket", "metric", "wts"], _partial_aggs(),
+        cast_types=_PARTIAL_TYPES,
     )
-    merged = (
-        existing.unionByName(inc)
-        .groupBy("bucket", "metric", "wts")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        )
-        .select(
-            "bucket", "metric", "wts",
-            *[F.col(c).cast(t).alias(c) for c, t in _PARTIAL_TYPES.items()],
-        )
-        .localCheckpoint(eager=True)
-    )
-    (
-        merged.repartition("bucket", "metric")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "metric")
-        .parquet(live)
-    )
-    return out
 
 
 def cascade_rollup(
@@ -215,30 +231,57 @@ def cascade_rollup(
     exactly (cnt/sum/sum_sq/sum_conf add; min/max fold), so the
     hierarchy costs one pass over the finer rollup, never a raw scan.
     This is how a 1s→1m→1h→1d ladder stays cheap to maintain at
-    100 TB: each level reads only the level below."""
+    100 TB: each level reads only the level below. See _cascade for
+    when an existing level is rebuilt."""
+    return _cascade(
+        spark, sf_dir, _rollup_dir, load_rollup, from_res_ms, to_res_ms,
+        (), force,
+    )
+
+
+def _cascade(
+    spark: SparkSession,
+    sf_dir: str,
+    dir_of,
+    load,
+    from_res_ms: int,
+    to_res_ms: int,
+    dims: tuple[str, ...],
+    force: bool,
+) -> Path:
+    """The one cascade body (plain and tagged ladders): the coarse
+    level at ``to_res_ms`` re-aggregated from the level at
+    ``from_res_ms``. Each cascaded generation records the fine
+    generation it was built from in a ``_FROM`` marker, and the level
+    is rebuilt whenever that marker is missing or differs from
+    ``current(fine)`` — an increment merged into the fine level
+    publishes a new fine generation, so the coarse level follows it
+    instead of serving stale windows."""
     if to_res_ms % from_res_ms != 0:
         raise ValueError("coarse resolution must be a multiple of the fine one")
-    out = _rollup_dir(sf_dir, to_res_ms)
-    if not force and (out / "_SUCCESS").exists():
+    out = dir_of(sf_dir, to_res_ms)
+    load(spark, sf_dir, from_res_ms)  # builds the fine level when missing
+    fine = current(dir_of(sf_dir, from_res_ms))
+    marker = (current(out) or out) / "_FROM"
+    if (
+        not force
+        and (out / "_SUCCESS").exists()
+        and marker.exists()
+        and marker.read_text() == fine.name
+    ):
         return out
-    fine = load_rollup(spark, sf_dir, from_res_ms)
     wts = (F.col("wts") - (F.col("wts") % F.lit(to_res_ms))).alias("w2")
     partials = (
-        fine.select(
-            "bucket", "metric", wts, "cnt", "sum", "sum_sq", "min", "max", "sum_conf"
+        spark.read.parquet(str(fine))
+        .select(
+            "bucket", "metric", *dims, wts,
+            "cnt", "sum", "sum_sq", "min", "max", "sum_conf",
         )
-        .groupBy("bucket", "metric", "w2")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        )
+        .groupBy("bucket", "metric", *dims, "w2")
+        .agg(*_partial_aggs())
         .withColumnRenamed("w2", "wts")
     )
-    return _atomic_write(partials, out)
+    return _atomic_write(partials, out, markers={"_FROM": fine.name})
 
 
 def load_rollup(spark: SparkSession, sf_dir: str, res_ms: int = 60_000) -> DataFrame:
@@ -523,37 +566,23 @@ def merge_distinct_increment(
     are union-mergeable, so the increment is sketch-agg the new points
     and hll_union_agg against the stored cells — same shape as
     merge_rollup_increment, cost proportional to the new data."""
-    invalidate_load_memo()
     out = _distinct_dir(sf_dir, res_ms)
     if not (out / "_SUCCESS").exists():
         build_distinct_rollup(spark, sf_dir, res_ms)
         return out
-    live = str(current(out))
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = (
         new_events.select("event_type", wts, "user_id")
         .groupBy("event_type", "wts")
         .agg(F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sketch"))
     )
-    touched = inc.select("event_type").distinct()
-    existing = spark.read.parquet(live).join(
-        F.broadcast(touched), "event_type", "left_semi"
-    )
     merged = (
-        existing.unionByName(inc)
+        _touched_rows(spark, out, inc, ["event_type"])
+        .unionByName(inc)
         .groupBy("event_type", "wts")
         .agg(F.hll_union_agg("sketch", F.lit(True)).alias("sketch"))
-        .localCheckpoint(eager=True)
     )
-    (
-        merged.repartition("event_type")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(live)
-    )
-    return out
+    return _publish_merged(out, merged, ("event_type",))
 
 
 # ------------------------------------------------- portable distinct
@@ -610,7 +639,7 @@ def load_portable_distinct_rollup(
 
     def _load() -> DataFrame:
         df = spark.read.parquet(str(current(p)))
-        # stale on-disk layouts rebuild in place: the pre-round-8
+        # stale on-disk layouts rebuild on load: the pre-round-8
         # register relation (no regs column) and the short-lived dense
         # int-array pack (regs: array<int> not array<struct<bucket,r>>)
         if "regs" not in df.columns or not dict(df.dtypes)[
@@ -665,7 +694,6 @@ def merge_portable_distinct_increment(
     stored cells of the touched event_types — cost proportional to the
     new data, and the result equals a from-scratch rebuild (max is
     idempotent and associative; pinned in tests/test_rollup.py)."""
-    invalidate_load_memo()
     from dqe_spark.operators.sketches import (
         hll_merge_packed,
         hll_pack,
@@ -676,7 +704,6 @@ def merge_portable_distinct_increment(
     if not (out / "_SUCCESS").exists():
         build_portable_distinct_rollup(spark, sf_dir, res_ms)
         return out
-    live = str(current(out))
     invalidate_retention_memo()
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = hll_pack(
@@ -687,22 +714,11 @@ def merge_portable_distinct_increment(
         ),
         ["event_type", "wts"],
     )
-    touched = inc.select("event_type").distinct()
-    existing = spark.read.parquet(live).join(
-        F.broadcast(touched), "event_type", "left_semi"
-    )
     merged = hll_merge_packed(
-        existing.unionByName(inc), ["event_type", "wts"]
-    ).localCheckpoint(eager=True)
-    (
-        merged.repartition("event_type")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(live)
+        _touched_rows(spark, out, inc, ["event_type"]).unionByName(inc),
+        ["event_type", "wts"],
     )
-    return out
+    return _publish_merged(out, merged, ("event_type",))
 
 
 # ----------------------------------------------------------------- tagged
@@ -751,41 +767,20 @@ def cascade_tagged_rollup(
     """Coarser tagged level cascaded from a finer one — same exact
     re-aggregation as cascade_rollup, with the dims in the key. Each
     ladder level reads only the level below, never raw points."""
-    if to_res_ms % from_res_ms != 0:
-        raise ValueError("coarse resolution must be a multiple of the fine one")
-    out = _tagged_dir(sf_dir, to_res_ms)
-    if not force and (out / "_SUCCESS").exists():
-        return out
-    fine = load_tagged_rollup(spark, sf_dir, from_res_ms)
-    wts = (F.col("wts") - (F.col("wts") % F.lit(to_res_ms))).alias("w2")
-    partials = (
-        fine.select(
-            "bucket", "metric", *dims, wts,
-            "cnt", "sum", "sum_sq", "min", "max", "sum_conf",
-        )
-        .groupBy("bucket", "metric", *dims, "w2")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        )
-        .withColumnRenamed("w2", "wts")
+    return _cascade(
+        spark, sf_dir, _tagged_dir, load_tagged_rollup, from_res_ms,
+        to_res_ms, dims, force,
     )
-    return _atomic_write(partials, out)
 
 
 def load_tagged_rollup(
     spark: SparkSession, sf_dir: str, res_ms: int = 60_000
 ) -> DataFrame:
     p = _tagged_dir(sf_dir, res_ms)
-    if not (p / "_SUCCESS").exists():
-        if res_ms % 60_000 == 0 and res_ms > 60_000:
-            cascade_tagged_rollup(spark, sf_dir, 60_000, res_ms)
-        else:
-            build_tagged_rollup(spark, sf_dir, res_ms)
+    if res_ms % 60_000 == 0 and res_ms > 60_000:
+        cascade_tagged_rollup(spark, sf_dir, 60_000, res_ms)
+    elif not (p / "_SUCCESS").exists():
+        build_tagged_rollup(spark, sf_dir, res_ms)
     return read_current(spark, p)
 
 
@@ -849,8 +844,9 @@ def load_tagged_hist_rollup(
 # mergeable by construction (cnt/sum/sum_sq/sum_conf add, min/max fold,
 # histogram counts add), so an hourly backfill rewrites only the
 # (bucket, metric) partitions the increment touches: cost proportional
-# to the NEW data, never the store. Same dynamic-partition-overwrite +
-# localCheckpoint shape as merge_rollup_increment.
+# to the NEW data, never the store. Each merge publishes a new
+# generation (store.publish_replacing): bytes rewritten are the touched
+# partitions, every other partition costs one hardlink per file.
 
 
 def _merge_touched_partitions(
@@ -863,30 +859,20 @@ def _merge_touched_partitions(
     sort_cols: tuple[str, ...] = ("wts",),
 ) -> Path:
     """Shared increment fold: read only the (bucket, metric) partitions
-    the increment touches, re-aggregate existing ∪ inc, dynamically
-    overwrite exactly those directories."""
-    invalidate_load_memo()
-    live = str(current(out))
-    affected = inc.select("bucket", "metric").distinct()
-    existing = spark.read.parquet(live).join(
-        F.broadcast(affected), ["bucket", "metric"], "left_semi"
+    the increment touches, re-aggregate existing ∪ inc, publish those
+    partitions rewritten (_publish_merged)."""
+    merged = (
+        _touched_rows(spark, out, inc, ["bucket", "metric"])
+        .unionByName(inc)
+        .groupBy(*group_cols)
+        .agg(*agg_exprs)
     )
-    merged = existing.unionByName(inc).groupBy(*group_cols).agg(*agg_exprs)
     if cast_types:
         merged = merged.select(
             *group_cols,
             *[F.col(c).cast(t).alias(c) for c, t in cast_types.items()],
         )
-    merged = merged.localCheckpoint(eager=True)
-    (
-        merged.repartition("bucket", "metric")
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "metric")
-        .parquet(live)
-    )
-    return out
+    return _publish_merged(out, merged, sort_cols=sort_cols)
 
 
 def merge_hist_increment(
@@ -932,14 +918,7 @@ def merge_tagged_increment(
     return _merge_touched_partitions(
         spark, out, inc,
         ["bucket", "metric", *dims, "wts"],
-        [
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum").alias("sum"),
-            F.sum("sum_sq").alias("sum_sq"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.sum("sum_conf").alias("sum_conf"),
-        ],
+        _partial_aggs(),
         cast_types=_PARTIAL_TYPES,
     )
 
@@ -1167,8 +1146,8 @@ def merge_cms_increment(
     points AT THE STORED WIDTH, SUM-merge against the stored counters
     of the touched event_types — cost proportional to the new data,
     result equals a from-scratch rebuild (counts are additive; pinned
-    in tests/test_cms.py). Same touched-partition dynamic-overwrite
-    contract as every other ladder.
+    in tests/test_cms.py). Published like every other ladder merge
+    (_publish_merged).
 
     Width migration: if the merged store's heaviest cell outgrows the
     stored width's load budget, the store is LOUDLY rebuilt at the
@@ -1177,7 +1156,6 @@ def merge_cms_increment(
     events source of record (then re-folds the in-hand increment).
     The check reads per-cell totals from the d=0 counter row (Σc over
     one hash row IS the cell's event count — no raw scan)."""
-    invalidate_load_memo()
     from dqe_spark.operators.sketches import (
         auto_cms_width,
         cms_merge,
@@ -1188,7 +1166,6 @@ def merge_cms_increment(
     if not (out / "_SUCCESS").exists():
         build_cms_rollup(spark, sf_dir, res_ms)
         return out
-    live = str(current(out))
     w = cms_width(sf_dir, res_ms)
     wts = (F.col("ts_ms") - (F.col("ts_ms") % F.lit(res_ms))).alias("wts")
     inc = cms_registers(
@@ -1197,12 +1174,10 @@ def merge_cms_increment(
         "user_id",
         w=w,
     )
-    touched = inc.select("event_type").distinct()
-    existing = spark.read.parquet(live).join(
-        F.broadcast(touched), "event_type", "left_semi"
-    )
+    # checkpointed: the width check below and the write both read it
     merged = cms_merge(
-        existing.unionByName(inc), ["event_type", "wts"]
+        _touched_rows(spark, out, inc, ["event_type"]).unionByName(inc),
+        ["event_type", "wts"],
     ).localCheckpoint(eager=True)
     n_max = (
         merged.where(F.col("d") == 0)
@@ -1221,15 +1196,7 @@ def merge_cms_increment(
         )
         build_cms_rollup(spark, sf_dir, res_ms, force=True, w=want)
         return merge_cms_increment(spark, new_events, sf_dir, res_ms)
-    (
-        merged.repartition("event_type")
-        .sortWithinPartitions("wts")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_type")
-        .parquet(live)
-    )
-    return out
+    return _publish_merged(out, merged, ("event_type",))
 
 
 #: per-session memo of the checkpointed day-register/day-estimate

@@ -47,7 +47,7 @@ import os
 import re
 import shutil
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -173,9 +173,8 @@ BUCKETED_TARGET_ROWS = 4_000_000
 #: store scan (serving-path guards keep working — nothing is
 #: checkpointed or cached here, only the analyzed relation reused).
 #: Keyed by applicationId so a new session never sees stale state, and
-#: by the resolved generation (``current``) so a rebuild by another
-#: process is a new key; EVERY store mutation in this process calls
-#: invalidate_load_memo().
+#: by the resolved generation (``current``) so a rebuild or mutation by
+#: another process is a new key; ``publish`` also clears it.
 _LOAD_MEMO: dict[tuple, object] = {}
 
 
@@ -189,19 +188,19 @@ def session_load_memo(spark, key: tuple, build):
 
 
 def invalidate_load_memo() -> None:
-    """Drop every memoized store load — called by every writer that
-    mutates a store directory (publish, increment merge, TTL expire,
-    purge), coarse on purpose: correctness over warm latency."""
+    """Drop every memoized store load — called by ``publish``, which
+    every store write and mutation goes through; coarse on purpose:
+    correctness over warm latency."""
     _LOAD_MEMO.clear()
 
 
 def current(out: Path) -> Path | None:
     """The generation directory the store at ``out`` publishes (a
     legacy real directory is its own generation), or None when the
-    store is not built. Spark reads and in-place writes target this
-    path, never ``out``: a scan resolved through the link loses its
-    files when the link moves, and a static overwrite through the link
-    replaces the link itself with a plain directory."""
+    store is not built. Spark reads target this path, never ``out``: a
+    scan resolved through the link loses its files when the link
+    moves. Nothing writes into it: every mutation publishes a new
+    generation (``publish_replacing``)."""
     if out.is_symlink():
         gen = out.parent / os.readlink(out)
         return gen if gen.exists() else None
@@ -248,6 +247,58 @@ def publish(out: Path, write: Callable[[Path], object]) -> Path:
         if g.name not in keep and not _writer_alive(g):
             _remove(g)
     return out
+
+
+def publish_replacing(
+    out: Path, replaced: Iterable[str], write: Callable[[Path], object]
+) -> Path:
+    """Publish a generation of ``out`` that equals ``current(out)``
+    with the partitions named in ``replaced`` replaced; returns
+    ``out``. Every store mutation goes through it: increment merges,
+    purges, TTL expiry and compaction.
+
+    ``write(gen)`` writes the replaced partitions' rows, plus any
+    rewritten sidecar (``_shingles``, ``_docstats``), into ``gen``.
+    Then every file of the live generation is hardlinked (``os.link``)
+    into ``gen``, one unit at a time, unless ``gen`` already has that
+    unit:
+
+    * a file of a partition leaf (``gb=7``, ``bucket=b/metric=m``,
+      ``index/cell=3``) is carried only if the caller did not name the
+      leaf in ``replaced`` and ``write`` did not write it. A rewritten
+      partition never receives the old files, and a replaced partition
+      that ends up with no rows is simply absent;
+    * any other file is a root marker (``_SUCCESS``, ``_B``,
+      ``_BUCKETS``, ``_WIDTH``, ``meta.json``) or belongs to a sidecar
+      directory, and is carried if ``gen`` lacks that top-level entry.
+
+    ``replaced`` names leaves by their path relative to the
+    generation, as Spark wrote it. The live generation is never
+    written, so a DataFrame read from it keeps collecting across the
+    mutation (``publish`` keeps it), and the new generation is a new
+    memo key in every process. Cost: bytes rewritten are proportional
+    to the touched partitions, plus one hardlink per carried file."""
+    live = current(out)
+    replaced = set(replaced)
+
+    def fill(gen: Path) -> None:
+        write(gen)
+        units: dict[Path, list[Path]] = {}
+        for d, _dirs, files in os.walk(live) if live else ():
+            for name in files:
+                rel = Path(d, name).relative_to(live)
+                in_leaf = "=" in rel.parent.name
+                unit = rel.parent if in_leaf else Path(rel.parts[0])
+                if not (in_leaf and str(unit) in replaced):
+                    units.setdefault(unit, []).append(rel)
+        for unit, rels in units.items():
+            if (gen / unit).exists():
+                continue
+            for rel in rels:
+                (gen / rel).parent.mkdir(parents=True, exist_ok=True)
+                os.link(live / rel, gen / rel)
+
+    return publish(out, fill)
 
 
 def drop(out: Path) -> None:
@@ -441,12 +492,14 @@ def expire_before(
     sf_dir: str, cutoff_ms: int, dirname: str = "metrics_by_date"
 ) -> list[str]:
     """Retention: drop date-layout partitions strictly OLDER than the
-    cutoff's calendar day. Pure directory unlink — no scan, no Spark
-    job — so at 100 TB the nightly retention pass costs O(dropped
-    partitions), the same contract as DalmatinerDB's per-bucket TTL
-    grace deletes (reference keeps data per-bucket `ttl`). The day
-    CONTAINING the cutoff is always kept (conservative: never drops
-    rows at/after the cutoff). Returns the dropped partition paths."""
+    cutoff's calendar day. A pure filesystem step — no scan, no Spark
+    job: the new generation (publish_replacing) names the expired
+    partitions as replaced and writes nothing, so every kept file is
+    one hardlink and the nightly retention pass costs O(files), the
+    contract of DalmatinerDB's per-bucket TTL grace deletes (reference
+    keeps data per-bucket `ttl`). The day CONTAINING the cutoff is
+    always kept (conservative: never drops rows at/after the cutoff).
+    Returns the dropped partition paths."""
     from datetime import datetime, timezone
 
     out = _dated_dir(sf_dir, dirname)
@@ -455,12 +508,12 @@ def expire_before(
     cutoff_day = datetime.fromtimestamp(
         cutoff_ms / 1000, tz=timezone.utc
     ).strftime("%Y-%m-%d")
-    dropped = []
-    for _bucket, dt, d in _date_partitions(out):
-        if dt < cutoff_day:
-            shutil.rmtree(d)
-            dropped.append(str(d))
-    return dropped
+    dropped = [d for _b, dt, d in _date_partitions(out) if dt < cutoff_day]
+    if dropped:
+        publish_replacing(
+            out, [str(d.relative_to(out)) for d in dropped], lambda gen: None
+        )
+    return [str(d) for d in dropped]
 
 
 def compact(
@@ -472,12 +525,13 @@ def compact(
 ) -> list[str]:
     """Small-file compaction for the date layout: partitions holding
     more than ``max_files`` parquet files are rewritten into one
-    (metric, ts)-sorted file each via dynamic partition overwrite —
-    healthy partitions are never touched. Incremental/streaming
-    ingests accrete small files that erode row-group skipping and
-    bloat file listings; a scheduled compaction restores the layout at
-    a cost proportional to the offending partitions only. Returns the
-    rewritten partition dirs."""
+    (metric, ts)-sorted file each in a new generation
+    (publish_replacing) — healthy partitions are carried by hardlink,
+    never rewritten. Incremental/streaming ingests accrete small files
+    that erode row-group skipping and bloat file listings; a scheduled
+    compaction restores the layout at a cost proportional to the
+    offending partitions, plus one hardlink per carried file. Returns
+    the rewritten partition dirs."""
     out = _dated_dir(sf_dir, dirname)
     if not (out / "_SUCCESS").exists():
         return []
@@ -491,23 +545,25 @@ def compact(
     if not offenders:
         return []
     keys = {(b, dt) for b, dt, _ in offenders}
-    live = str(current(out))
-    df = spark.read.parquet(live)
+    df = spark.read.parquet(str(current(out)))
     cond = None
     for b, dt in sorted(keys):
         c = (F.col("bucket") == b) & (F.col("dt") == dt)
         cond = c if cond is None else (cond | c)
-    sub = df.where(cond).localCheckpoint(eager=True)
+    sub = df.where(cond)
     sort_cols = ["bucket", "dt"] + [
         c for c in ("metric", "event_type") if c in sub.columns
     ] + ["ts_ms"]
-    (
+    writer = (
         sub.repartition(len(keys), "bucket", "dt")
         .sortWithinPartitions(*sort_cols)
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket", "dt")
-        .parquet(live)
+    )
+    publish_replacing(
+        out,
+        [str(d.relative_to(out)) for _, _, d in offenders],
+        lambda gen: writer.parquet(str(gen)),
     )
     return [str(d) for _, _, d in offenders]
 

@@ -31,12 +31,13 @@ At 100 TB: the index build is one map + one shuffle-free partitioned
 write (the explode is map-side; repartition("tb") co-locates each
 bucket). Search reads K pruned buckets (K = #terms), then a tiny
 groupBy on doc_id — cost scales with posting-list length, never corpus
-size. Incremental maintenance = append new docs' postings to their
-buckets (dynamic partition overwrite), same pattern as the rollup
-increments. No small-file compaction is needed by construction: every
-merge/purge repartitions by tb before a dynamic overwrite, so each
-touched bucket directory is always replaced by exactly one sorted
-file.
+size. Incremental maintenance = rewrite the touched buckets with the
+new docs' postings in a new generation (store.publish_replacing:
+bytes rewritten ∝ the touched buckets plus ``_docstats``, one hardlink
+per carried file), same pattern as the rollup increments. No
+small-file compaction is needed by construction: every merge/purge
+repartitions by tb, so each touched bucket is always replaced by
+exactly one sorted file.
 """
 
 from __future__ import annotations
@@ -48,7 +49,12 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqe_spark.sources.store import STORE_ROOT, current, publish
+from dqe_spark.sources.store import (
+    STORE_ROOT,
+    current,
+    publish,
+    publish_replacing,
+)
 
 N_BUCKETS_DEFAULT = 64
 
@@ -144,19 +150,36 @@ def build_text_index(
     postings = _postings(docs, n_buckets)
 
     def write(gen: Path) -> None:
-        (
-            postings.repartition("tb")
-            .sortWithinPartitions("token", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(str(gen))
-        )
-        _docstats(docs).coalesce(1).write.mode("overwrite").parquet(
-            str(gen / "_docstats")
-        )
+        _write_index(postings, _docstats(docs), gen)
         (gen / "_BUCKETS").write_text(str(n_buckets))
 
     return publish(out, write)
+
+
+def _write_index(postings: DataFrame, docstats: DataFrame, gen: Path) -> None:
+    (
+        postings.repartition("tb")
+        .sortWithinPartitions("token", "doc_id")
+        .write.mode("overwrite")
+        .partitionBy("tb")
+        .parquet(str(gen))
+    )
+    docstats.coalesce(1).write.mode("overwrite").parquet(str(gen / "_docstats"))
+
+
+def _replace_buckets(
+    sf_dir: str, touched: list[int], postings: DataFrame, docstats: DataFrame
+) -> Path:
+    """Publish ``postings`` as the new content of the ``touched``
+    buckets and ``docstats`` as the new ``_docstats`` sidecar
+    (store.publish_replacing): a touched bucket left without postings
+    is absent — a purged doc can never be found through it — and every
+    other bucket plus ``_BUCKETS`` is carried by hardlink."""
+    return publish_replacing(
+        _index_dir(sf_dir),
+        [f"tb={b}" for b in touched],
+        lambda gen: _write_index(postings, docstats, gen),
+    )
 
 
 def merge_index_increment(
@@ -164,9 +187,9 @@ def merge_index_increment(
 ) -> Path:
     """Fold newly-landed documents' postings into the index: touched
     buckets (the new postings' tb values) are rewritten as
-    existing ∪ new, (token, doc_id)-distinct, via dynamic partition
-    overwrite — cost proportional to the new docs' vocabulary, same
-    pattern as the rollup/ANN increments.
+    existing ∪ new, (token, doc_id)-distinct, in a new generation
+    (_replace_buckets) — cost proportional to the new docs'
+    vocabulary, same pattern as the rollup/ANN increments.
 
     Contract: APPEND of new doc_ids (and idempotent re-landing of an
     unchanged doc — the distinct absorbs it). A doc whose TEXT changed
@@ -185,28 +208,17 @@ def merge_index_increment(
         existing.select("doc_id", "token", "tf", "positions", "tb")
         .unionByName(inc)
         .distinct()
-        .localCheckpoint(eager=True)
-    )
-    (
-        merged.repartition("tb")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tb")
-        .parquet(str(p))
     )
     # doc stats follow the same contract (append of new doc_ids, the
     # distinct absorbs idempotent re-landing). Small table; at true
     # corpus scale partition by ingest date and append instead.
-    ds_path = p / "_docstats"
     ds = (
-        spark.read.parquet(str(ds_path))
+        spark.read.parquet(str(p / "_docstats"))
         .unionByName(_docstats(new_docs))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    ds.coalesce(1).write.mode("overwrite").parquet(str(ds_path))
-    return _index_dir(sf_dir)
+    # every touched bucket holds new postings, so none is named
+    return _replace_buckets(sf_dir, [], merged, ds)
 
 
 def _bucket_of(term: str, n_buckets: int) -> int:
@@ -447,36 +459,28 @@ def purge_doc_ids(
 ) -> Path:
     """Remove documents from the index (takedown / right-to-be-
     forgotten): buckets containing any purged doc rewrite WITHOUT its
-    postings via dynamic partition overwrite — cost proportional to
-    the touched buckets, not the index; doc stats drop the ids too.
+    postings in a new generation (_replace_buckets) — cost
+    proportional to the touched buckets, not the index; doc stats drop
+    the ids too.
     Equals a rebuild from the filtered corpus, posting for posting
     (asserted in tests). ``doc_ids`` is a 1-column (doc_id) frame."""
     p = index_path(sf_dir)
     ids = F.broadcast(doc_ids.select("doc_id").distinct())
     idx = spark.read.parquet(str(p))
-    touched = (
-        idx.join(ids, "doc_id", "left_semi").select("tb").distinct()
-    )
+    touched = sorted(
+        r["tb"]
+        for r in idx.join(ids, "doc_id", "left_semi")
+        .select("tb")
+        .distinct()
+        .collect()
+    )  # driver-side, bounded by the bucket count
     kept = (
-        idx.join(F.broadcast(touched), "tb", "left_semi")
+        idx.where(F.col("tb").isin(touched))
         .join(ids, "doc_id", "left_anti")
         .select("doc_id", "token", "tf", "positions", "tb")
-        .localCheckpoint(eager=True)
     )
-    (
-        kept.repartition("tb")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tb")
-        .parquet(str(p))
+    ds = spark.read.parquet(str(p / "_docstats")).join(
+        ids, "doc_id", "left_anti"
     )
-    ds_path = p / "_docstats"
-    ds = (
-        spark.read.parquet(str(ds_path))
-        .join(ids, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    ds.coalesce(1).write.mode("overwrite").parquet(str(ds_path))
-    return _index_dir(sf_dir)
+    return _replace_buckets(sf_dir, touched, kept, ds)
 

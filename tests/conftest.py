@@ -11,6 +11,14 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def file_inodes(partition: Path) -> frozenset[int]:
+    """The inodes of a partition directory's files. A store mutation
+    carries an untouched partition into its new generation by
+    hardlink, so the same inodes before and after mean the partition
+    was not rewritten."""
+    return frozenset(f.stat().st_ino for f in partition.iterdir())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dqe_spark.session import get_spark

@@ -3,7 +3,7 @@ determinism, and recall of the served query path."""
 
 from __future__ import annotations
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, file_inodes
 from pyspark.sql import functions as F
 
 
@@ -39,7 +39,7 @@ def test_probe_prunes_partitions(spark):
 
 def test_merge_increment_upserts_and_prunes_untouched_cells(spark):
     """Incremental maintenance: new ids append, re-landed ids replace,
-    untouched cell partitions are NOT rewritten (dynamic overwrite)."""
+    untouched cell partitions are NOT rewritten (carried by hardlink)."""
     from dqe_spark.operators import similarity as S
     from dqe_spark.sources import ann_store
 
@@ -72,7 +72,7 @@ def test_merge_increment_upserts_and_prunes_untouched_cells(spark):
         if d.name.startswith("cell=")
         and int(d.name.split("=")[1]) not in inc_cells
     ]
-    before = {d.name: max(f.stat().st_mtime_ns for f in d.iterdir()) for d in untouched}
+    before = {d.name: file_inodes(d) for d in untouched}
 
     ann_store.merge_ann_increment(spark, SF_SMOKE, inc)
 
@@ -88,8 +88,9 @@ def test_merge_increment_upserts_and_prunes_untouched_cells(spark):
     assert list(idx.where(F.col("vec_id") == new_id).first()["codes"]) == list(
         want_codes
     )
-    # untouched cell partitions were not rewritten
-    after = {d.name: max(f.stat().st_mtime_ns for f in d.iterdir()) for d in untouched}
+    # untouched cell partitions were not rewritten: every file is the
+    # same inode, carried into the new generation by hardlink
+    after = {d.name: file_inodes(p / "index" / d.name) for d in untouched}
     assert before == after
     ann_store.ingest_ann(spark, SF_SMOKE, force=True)  # restore for other tests
 
@@ -149,9 +150,7 @@ def test_purge_vector_ids(spark):
         d for d in os.listdir(p / "index")
         if d.startswith("cell=") and int(d.split("=")[1]) not in cell_of
     ]
-    mtimes = {
-        d: os.path.getmtime(p / "index" / d) for d in untouched
-    }
+    inodes = {d: file_inodes(p / "index" / d) for d in untouched}
 
     ann_store.purge_vector_ids(spark, SF_SMOKE, victims)
     idx1, _ = ann_store.load_ann(spark, SF_SMOKE)
@@ -159,7 +158,7 @@ def test_purge_vector_ids(spark):
     assert not (left & vset)
     assert idx1.count() == n0 - len(vset)
     for d in untouched:
-        assert os.path.getmtime(p / "index" / d) == mtimes[d], d
+        assert file_inodes(p / "index" / d) == inodes[d], d
 
     ann_store.ingest_ann(spark, SF_SMOKE, force=True)  # restore
 
@@ -168,9 +167,9 @@ def test_ann_increment_file_counts_stay_bounded(spark):
     """Round-5 verdict #7: the per-bucket one-file invariant proven
     for the text index / minhash store holds for the ANN index too —
     N successive merges keep every cell= dir at one parquet file
-    (each merge shuffles a touched cell into one task and dynamic-
-    overwrites the dir), and the merged index equals a from-scratch
-    ingest over the same rows."""
+    (each merge shuffles a touched cell into one task and writes it
+    afresh into the new generation), and the merged index equals a
+    from-scratch ingest over the same rows."""
     from dqe_spark.sources import ann_store as AS
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -182,7 +181,7 @@ def test_ann_increment_file_counts_stay_bounded(spark):
             AS.merge_ann_increment(
                 spark, SF_SMOKE, rest.where(F.col("vec_id") % 8 == 2 * i + 1)
             )
-        p = AS.ann_path(SF_SMOKE) / "index"
+        p = AS._ann_dir(SF_SMOKE) / "index"  # the link: always current
         files = {
             d.name: len(list(d.glob("*.parquet")))
             for d in p.iterdir()
@@ -207,12 +206,12 @@ def test_ann_increment_file_counts_stay_bounded(spark):
 
 
 def test_ann_upsert_vacating_sole_cell_leaves_no_stale_row(spark):
-    """Dynamic partition overwrite skips cells with no output rows: an
-    upsert that moves a cell's ONLY occupant to another cell (or a
-    purge emptying a cell) must delete the old cell dir explicitly or
-    the stale row keeps being served. Force it with a 2-vector corpus
-    whose vectors land in different cells, then re-land one ON TOP of
-    the other's position."""
+    """An upsert that moves a cell's ONLY occupant to another cell (or
+    a purge emptying a cell) leaves that cell with no rows: it must be
+    absent from the new generation, or the stale row keeps being
+    served. Force it with a 2-vector corpus whose vectors land in
+    different cells, then re-land one ON TOP of the other's
+    position."""
     from dqe_spark.sources import ann_store as AS
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -221,7 +220,7 @@ def test_ann_upsert_vacating_sole_cell_leaves_no_stale_row(spark):
     a, b = rows[0], rows[1]
     try:
         AS.ingest_ann(spark, SF_SMOKE, source=two, n_clusters=2, force=True)
-        p = AS.ann_path(SF_SMOKE) / "index"
+        p = AS._ann_dir(SF_SMOKE) / "index"  # the link: always current
         idx = spark.read.parquet(str(p))
         cells = {r["vec_id"]: r["cell"] for r in idx.collect()}
         if cells[a["vec_id"]] != cells[b["vec_id"]]:
@@ -231,7 +230,6 @@ def test_ann_upsert_vacating_sole_cell_leaves_no_stale_row(spark):
                 f"vec_id long, embedding {two.schema['embedding'].dataType.simpleString()}",
             )
             AS.merge_ann_increment(spark, SF_SMOKE, moved)
-            spark.catalog.refreshByPath(str(p))
             left = spark.read.parquet(str(p)).groupBy("vec_id").count().collect()
             assert all(r["count"] == 1 for r in left), left
             got_cells = {

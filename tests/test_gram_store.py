@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, file_inodes
 
 
 def _snapshot(spark, p):
@@ -201,7 +201,6 @@ def test_autoscale_rebucket_keeps_increment_cost_proportional(spark):
     computation. Uses a tiny target_rows so the doubling happens at
     smoke scale; uses a VARIANT store so the canonical one is
     untouched."""
-    import time
     from pathlib import Path
 
     from dqe_spark.sources import gram_store as GS
@@ -237,7 +236,7 @@ def test_autoscale_rebucket_keeps_increment_cost_proportional(spark):
     assert got == _snapshot(spark, p)
 
     # (b) a 1-doc increment touches only its own buckets: count the
-    # partition dirs whose mtime changes across the merge
+    # partition dirs whose files change inode across the merge
     base_max = docs.agg(F.max("doc_id")).first()[0]
     inc = spark.createDataFrame(
         [(base_max + 77, "tiny increment with a handful of new words")],
@@ -246,12 +245,11 @@ def test_autoscale_rebucket_keeps_increment_cost_proportional(spark):
     inc_buckets = {
         r["gb"] for r in GS._grams_of(inc, n_buckets=n1).select("gb").collect()
     }
-    before = {d.name: d.stat().st_mtime_ns for d in Path(p).glob("gb=*")}
-    time.sleep(0.01)
+    before = {d.name: file_inodes(d) for d in Path(p).glob("gb=*")}
     GS.merge_gram_increment(
         spark, SF_SMOKE, inc, target_rows=target, variant=var
     )
-    after = {d.name: d.stat().st_mtime_ns for d in Path(p).glob("gb=*")}
+    after = {d.name: file_inodes(d) for d in Path(p).glob("gb=*")}
     rewritten = {b for b in after if after[b] != before.get(b)}
     assert rewritten <= {f"gb={b}" for b in inc_buckets}, (
         rewritten, inc_buckets,

@@ -99,12 +99,11 @@ def test_probe_finds_planted_neardup(spark):
 
 
 def test_reland_vacating_sole_bucket_leaves_no_stale_keys(spark):
-    """Dynamic partition overwrite only rewrites bb partitions PRESENT
-    in the output — so when a re-landed doc was the ONLY occupant of an
-    old bucket and its new text hashes elsewhere, that bucket has zero
-    merged rows and would silently keep its stale band keys unless the
-    store deletes empty touched partitions explicitly. Single-doc
-    corpus makes every old bucket sole-occupant, forcing the hole."""
+    """When a re-landed doc was the ONLY occupant of an old bucket and
+    its new text hashes elsewhere, that bucket has zero merged rows: it
+    must be absent from the new generation, or its stale band keys
+    keep being served. Single-doc corpus makes every old bucket
+    sole-occupant, forcing the case."""
     from dqe_spark.sources import minhash_store as MS
 
     p = MS._store_dir(SF_SMOKE)

@@ -1,7 +1,8 @@
 """store.publish: the one generation-based protocol every store and
-sink write goes through — crash safety, readers across a republish,
-cross-process memo keys, collection, legacy migration, and a guard
-against hand-rolled publish code creeping back in."""
+sink write goes through — crash safety, readers across a republish or
+a mutation, cross-process memo keys, collection, legacy migration,
+and a guard against hand-rolled publish or in-place writes creeping
+back in."""
 
 from __future__ import annotations
 
@@ -115,6 +116,85 @@ def test_memoised_load_sees_a_rebuild_by_another_process(spark, monkeypatch):
     finally:
         monkeypatch.undo()
         DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
+
+
+def _mutation(spark, name: str):
+    """(store path, build it, mutate it, restore) for one store
+    mutation: a rollup increment that touches existing partitions, or
+    a gram-store purge."""
+    from dqe_spark.sources import gram_store as GS
+    from dqe_spark.sources import rollup as R
+    from dqe_spark.sources.metric_store import load_metrics
+
+    if name == "merge_rollup_increment":
+        m = load_metrics(spark, SF_SMOKE)
+        points = m.where(F.col("metric") == m.agg(F.min("metric")).first()[0])
+        return (
+            R._rollup_dir(SF_SMOKE, 60_000),
+            lambda: R.build_rollup(spark, SF_SMOKE, 60_000, force=True),
+            lambda: R.merge_rollup_increment(spark, points, SF_SMOKE, 60_000),
+            lambda: R.build_rollup(spark, SF_SMOKE, 60_000, force=True),
+        )
+    var = "publish_test"
+    return (
+        GS._store_dir(SF_SMOKE, var),
+        lambda: GS.build_gram_store(spark, SF_SMOKE, variant=var, force=True),
+        lambda: GS.purge_doc_ids(spark, SF_SMOKE, [0, 1, 2, 3], variant=var),
+        lambda: ST.drop(GS._store_dir(SF_SMOKE, var)),
+    )
+
+
+_MUTATIONS = ["merge_rollup_increment", "gram_store.purge_doc_ids"]
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.mark.parametrize("mutation", _MUTATIONS)
+def test_reader_keeps_its_generation_across_a_mutation(spark, mutation):
+    """A DataFrame loaded before an increment or a purge still collects
+    its old rows afterwards: the mutation publishes a new generation
+    and never writes into the one being read."""
+    out, build, mutate, restore = _mutation(spark, mutation)
+    try:
+        build()
+        before = ST.read_current(spark, out)
+        want = _rows(before)
+        mutate()
+        assert _rows(spark.read.parquet(str(ST.current(out)))) != want
+        assert _rows(before) == want
+    finally:
+        restore()
+
+
+@pytest.mark.parametrize("mutation", _MUTATIONS)
+def test_memoised_load_sees_a_mutation_by_another_process(
+    spark, monkeypatch, mutation
+):
+    """With the in-process memo invalidation a no-op (standing in for
+    a mutation by another process), the next memoised load after an
+    increment or a purge returns the new rows: the mutation is a new
+    generation, so a new memo key."""
+    from dqe_spark.sources import gram_store as GS
+    from dqe_spark.sources import rollup as R
+
+    out, build, mutate, restore = _mutation(spark, mutation)
+    try:
+        build()
+        old = _rows(ST.read_current(spark, out))
+        for mod in (ST, R, GS):
+            monkeypatch.setattr(
+                mod, "invalidate_load_memo", lambda: None, raising=False
+            )
+        mutate()
+        monkeypatch.undo()
+        want = _rows(spark.read.parquet(str(ST.current(out))))
+        assert want != old
+        assert _rows(ST.read_current(spark, out)) == want
+    finally:
+        monkeypatch.undo()
+        restore()
 
 
 def test_third_publish_collects_old_and_unpublished_generations(spark, tmp_path):
@@ -285,21 +365,32 @@ def test_markers_ride_the_swap(spark, monkeypatch, case):
 
 
 def test_no_hand_rolled_publish_outside_the_primitive():
-    """Every store and sink write goes through store.publish: no
-    rename, replace or ``_tmp_`` staging directory anywhere else in
-    the package."""
+    """Every store and sink write goes through store.publish, and no
+    store is ever written in place: no rename, replace or ``_tmp_``
+    staging directory outside ``publish``; no dynamic partition
+    overwrite, catalog path refresh, or ``shutil.rmtree`` outside
+    ``store._remove`` anywhere in the package."""
     root = Path(ST.__file__).resolve().parent.parent
     prim = Path(ST.__file__).resolve()
-    fn = next(
-        n for n in ast.parse(prim.read_text()).body
-        if isinstance(n, ast.FunctionDef) and n.name == "publish"
-    )
-    inside = range(fn.lineno, fn.end_lineno + 1)
+    body = ast.parse(prim.read_text()).body
+
+    def lines_of(name: str) -> range:
+        fn = next(
+            n for n in body
+            if isinstance(n, ast.FunctionDef) and n.name == name
+        )
+        return range(fn.lineno, fn.end_lineno + 1)
+
+    only_inside = {
+        r"os\.(rename|replace)\(|_tmp_": lines_of("publish"),
+        r"shutil\.rmtree\(": lines_of("_remove"),
+        r"partitionOverwriteMode|refreshByPath": range(0),
+    }
     bad = [
         f"{f.relative_to(root)}:{i}: {line.strip()}"
         for f in sorted(root.rglob("*.py"))
         for i, line in enumerate(f.read_text().splitlines(), 1)
-        if re.search(r"os\.(rename|replace)\(|_tmp_", line)
-        and not (f == prim and i in inside)
+        for pattern, inside in only_inside.items()
+        if re.search(pattern, line) and not (f == prim and i in inside)
     ]
-    assert not bad, "hand-rolled publish outside store.publish:\n" + "\n".join(bad)
+    assert not bad, "in-place or hand-rolled store write:\n" + "\n".join(bad)

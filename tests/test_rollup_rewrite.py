@@ -287,3 +287,51 @@ def test_alert_above_composes_with_rollup_rewrite(spark):
     a = sorted(tuple(r) for r in raw.collect())
     b = sorted(tuple(r) for r in ru.collect())
     assert a == b and a  # identical intervals, and some fire
+
+
+def test_cascaded_level_follows_a_merged_increment(spark, tmp_path):
+    """After an increment is merged into the 1m rollup, a 1h read
+    through the rollups sees it: the 1h level is cascaded again from
+    the new 1m generation instead of serving its stale windows."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dqe_spark.sources import rollup as R
+    from dqe_spark.sources.metric_store import load_metrics
+    from dqe_spark.sources.store import STORE_ROOT
+
+    sf, batch = tmp_path / "rollup_cascade_sf", tmp_path / "batch"
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    (sf / "events.parquet").mkdir(parents=True)
+    pq.write_table(events, sf / "events.parquet" / "part-0.parquet")
+    late = events.slice(0, 200)
+    late = late.set_column(
+        0, "event_id", pa.array(range(events.num_rows, events.num_rows + 200))
+    )
+    dql = f"SELECT sum('events'.* BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1}"
+
+    def rows(**kw):
+        (res,) = engine.run(spark, dql, str(sf), **kw)
+        return res.df, {
+            (r["metric"], r["ts_ms"]): r["value"] for r in res.df.collect()
+        }
+
+    try:
+        rows(use_rollups=True)  # builds the 1m rollups and the 1h cascade
+        (batch / "events.parquet").mkdir(parents=True)
+        for d in (sf, batch):
+            pq.write_table(late, d / "events.parquet" / "part-1.parquet")
+        R.merge_rollup_increment(
+            spark, load_metrics(spark, str(batch)), str(sf), 60_000
+        )
+        df, got = rows(use_rollups=True)
+        assert "rollup_3600000ms" in _plan_of(df)
+        _, want = rows()
+        assert got.keys() == want.keys() and got
+        assert all(abs(got[k] - want[k]) <= 1e-4 for k in want), [
+            (k, got[k], want[k]) for k in want if abs(got[k] - want[k]) > 1e-4
+        ][:5]
+    finally:
+        shutil.rmtree(STORE_ROOT / sf.name, ignore_errors=True)

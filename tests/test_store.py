@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, file_inodes
 
 
 def test_ts_schema_contract(spark, tmp_path):
@@ -256,15 +256,16 @@ def test_compact_rewrites_fragmented_partitions_only(spark):
     healthy = [
         d for _, _, d in store._date_partitions(out) if d != tgt
     ]
-    mtimes = {str(d): max(f.stat().st_mtime_ns for f in d.iterdir()) for d in healthy}
+    inodes = {str(d): file_inodes(d) for d in healthy}
 
     rewritten = store.compact(spark, SF_SMOKE, max_files=8)
     assert rewritten == [str(tgt)]
     assert len(list(tgt.glob("*.parquet"))) == 1
     assert spark.read.parquet(str(tgt)).count() == n
-    # healthy partitions untouched; content identical
-    after = {str(d): max(f.stat().st_mtime_ns for f in d.iterdir()) for d in healthy}
-    assert mtimes == after
+    # healthy partitions untouched (same inodes, carried by hardlink);
+    # content identical
+    after = {str(d): file_inodes(d) for d in healthy}
+    assert inodes == after
     df_after = store.load(spark, SF_SMOKE, layout="date").select(
         "bucket", "metric", "ts_ms", "value", "dt"
     )
