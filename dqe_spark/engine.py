@@ -12,8 +12,12 @@ caller's choice, which is what makes 100 TB outputs writable).
 
 from __future__ import annotations
 
+import dataclasses
+import threading
+
 from pyspark.sql import SparkSession
 
+from dqe_spark.dql import ast as A
 from dqe_spark.dql.compiler import Compiler, PlanError, Result  # noqa: F401
 from dqe_spark.dql.parser import parse
 from dqe_spark.sources.metric_store import (
@@ -52,6 +56,20 @@ def _rollup_stores(spark: SparkSession, sf_dir: str):
     )
 
 
+def _reads_events(node) -> bool:
+    """Whether the parsed query has an ``EVENTS FROM`` selector
+    anywhere (statement, alias or function argument)."""
+    if isinstance(node, A.EventsFrom):
+        return True
+    if isinstance(node, (tuple, list)):
+        return any(map(_reads_events, node))
+    if dataclasses.is_dataclass(node):
+        return any(
+            _reads_events(getattr(node, f.name)) for f in dataclasses.fields(node)
+        )
+    return False
+
+
 def plan(
     spark: SparkSession,
     dql: str,
@@ -64,7 +82,11 @@ def plan(
 
     use_rollups=True materializes (once) and registers the 1m rollup
     store, letting the compiler rewrite eligible distributive window
-    aggregates to read pre-aggregated partials instead of raw points."""
+    aggregates to read pre-aggregated partials instead of raw points.
+
+    Store loads are memoised per generation (store.load_memo), and the
+    events store is loaded only for a query with an EVENTS selector;
+    without one the compiler gets ``events=None``."""
     rollups = hist_rollups = tagged_rollups = tagged_hist_rollups = None
     if use_rollups:
         rollups, hist_rollups, tagged_rollups, tagged_hist_rollups = (
@@ -73,7 +95,7 @@ def plan(
     ast = parse(dql)
     comp = Compiler(
         metrics=load_metrics(spark, sf_dir),
-        events=load_events(spark, sf_dir),
+        events=load_events(spark, sf_dir) if _reads_events(ast) else None,
         resolutions=BUCKET_RESOLUTION_MS,
         now_ms=now_ms,
         rollups=rollups,
@@ -202,9 +224,12 @@ def collect(
     plan, execute, funnel, with an optional query timeout and the
     `no_results` check. Returns [(Result, rows)].
 
-    The timeout runs the collects in a worker thread under a dedicated
-    job group; on expiry the group's Spark jobs are cancelled
-    driver-side before raising, so no executor work leaks.
+    The timeout bounds the plan step and the collects together: both
+    run in a worker thread under a dedicated job group, so eager jobs
+    the compiler starts at plan time (near-dup, kNN and BM25
+    checkpoints and fits) count against it too; on expiry the group's
+    Spark jobs are cancelled driver-side before raising, so no
+    executor work leaks.
 
     debug=True always writes a plan artifact; otherwise one is written
     when the query runs longer than slow_ms (reference behavior:
@@ -218,60 +243,85 @@ def collect(
 
     from dqe_spark.plans import span as _span
 
-    t0 = _time_mod.monotonic()
-    _span.start("query", trace_id)
-    _span.tag("query", dql)
-    try:
+    expired = threading.Event()
+
+    def plan_and_collect():
         results = plan(spark, dql, sf_dir, now_ms, use_rollups)
         _span.tag("parts", len(results))
         # the reference logs this milestone verbatim (sic,
         # src/dqe.erl:202 — kept identical for artifact parity)
         _span.log("preperation done")
-        return _collect_traced(
-            spark, dql, results, t0, timeout_s, debug, slow_ms, _span,
-            _time_mod,
-        )
+        return results, _collect_traced(results, expired)
+
+    t0 = _time_mod.monotonic()
+    _span.start("query", trace_id)
+    _span.tag("query", dql)
+    try:
+        if timeout_s is None:
+            results, out = plan_and_collect()
+        else:
+            results, out = _within_timeout(
+                spark, dql, timeout_s, expired, plan_and_collect
+            )
+        _span.log("query done")  # src/dqe.erl:230
+        elapsed_ms = int((_time_mod.monotonic() - t0) * 1000)
+        _span.tag("elapsed_ms", elapsed_ms)
+        if debug or (slow_ms is not None and elapsed_ms > slow_ms):
+            _debug_artifact(results, dql, elapsed_ms)
+        for r, rows in out:
+            if r.globs and len(rows) == 0:
+                raise GlobNotFound(r.globs[0])
+        if all(len(rows) == 0 for _, rows in out):
+            _span.tag("result", "no metrics")  # src/dqe.erl:196
+            raise NoResults()
+        return out
     finally:
         _span.stop()
 
 
 def _collect_traced(
-    spark, dql, results, t0, timeout_s, debug, slow_ms, _span, _time_mod
+    results: list[Result], expired: threading.Event
 ) -> list[tuple[Result, list]]:
-    if timeout_s is None:
-        out = [(r, r.df.collect()) for r in results]
-    else:
-        import threading
-        import uuid
-
-        group = f"dqe-{uuid.uuid4().hex[:12]}"
-        box: dict = {}
-
-        def work():
-            try:
-                spark.sparkContext.setJobGroup(group, dql[:200], True)
-                box["rows"] = [(r, r.df.collect()) for r in results]
-            except Exception as e:  # surfaced after join
-                box["err"] = e
-
-        t = threading.Thread(target=work, daemon=True)
-        t.start()
-        t.join(timeout_s)
-        if t.is_alive():
-            spark.sparkContext.cancelJobGroup(group)
-            raise QueryTimeout(f"query exceeded {timeout_s}s")
-        if "err" in box:
-            raise box["err"]
-        out = box["rows"]
-    _span.log("query done")  # src/dqe.erl:230
-    elapsed_ms = int((_time_mod.monotonic() - t0) * 1000)
-    _span.tag("elapsed_ms", elapsed_ms)
-    if debug or (slow_ms is not None and elapsed_ms > slow_ms):
-        _debug_artifact(results, dql, elapsed_ms)
-    for r, rows in out:
-        if r.globs and len(rows) == 0:
-            raise GlobNotFound(r.globs[0])
-    if all(len(rows) == 0 for _, rows in out):
-        _span.tag("result", "no metrics")  # src/dqe.erl:196
-        raise NoResults()
+    out = []
+    for r in results:
+        # a timed-out query starts no further collect: Spark refuses
+        # the cancelled group's later jobs, but not the shuffle-stage
+        # jobs adaptive execution submits for them
+        if expired.is_set():
+            raise QueryTimeout("query timed out before its collect")
+        out.append((r, r.df.collect()))
     return out
+
+
+def _within_timeout(
+    spark, dql: str, timeout_s: float, expired: threading.Event, work
+):
+    """``work()`` in a worker thread under a fresh job group (and the
+    caller's span context); on expiry ``expired`` is set, the group's
+    jobs are cancelled and QueryTimeout raised."""
+    import contextvars
+    import uuid
+
+    group = f"dqe-{uuid.uuid4().hex[:12]}"
+    box: dict = {}
+
+    def run():
+        try:
+            spark.sparkContext.setJobGroup(group, dql[:200], True)
+            box["out"] = work()
+        except Exception as e:  # surfaced after join
+            box["err"] = e
+
+    ctx = contextvars.copy_context()
+    t = threading.Thread(target=ctx.run, args=(run,), daemon=True)
+    t.start()
+    t.join(timeout_s)
+    if t.is_alive():
+        expired.set()
+        # also cancels the group's jobs submitted from now on: the
+        # worker may still be planning
+        spark.sparkContext._jsc.sc().cancelJobGroupAndFutureJobs(group)
+        raise QueryTimeout(f"query exceeded {timeout_s}s")
+    if "err" in box:
+        raise box["err"]
+    return box["out"]

@@ -3752,14 +3752,15 @@ def knn_ann_serve(spark, sf_dir):
     STORED vectors — the raw embeddings table never appears in the
     serving plan (sources/ann_store.knn_pq_probed)."""
     from dqe_spark.sources import ann_store
-    from dqe_spark.sources.store import session_load_memo
+    from dqe_spark.sources.store import load_memo
 
     # the fixture query vector stands in for the vector a production
     # caller BRINGS — fetch it once per session, not one raw-table
     # scan per serve (it is not part of the serve cost being measured)
-    qvec = session_load_memo(
+    qvec = load_memo(
         spark,
         ("knn_serve_qvec", sf_dir),
+        None,
         lambda: list(
             load_table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") == 7)

@@ -4,6 +4,18 @@ Local testing runs on local[N]; the same settings are what we would
 ship on a real cluster: AQE on (runtime re-planning, skew-join
 handling), reasonable shuffle partitioning, Arrow for the few
 pandas-UDF paths.
+
+PySpark's DataFrame debugging is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every ``F.col``, comparison, ``&`` and ``where`` captures its Python
+call site: an ``inspect`` stack walk plus about 20 py4j round trips
+per Column call (``F.col("bucket") == "events"`` alone costs 24),
+which made up most of a short query's plan build. The cost of turning
+it off: the "DataFrame query context" of a Spark runtime error no
+longer names the Python line that built the failing expression. The
+engine's own errors are unaffected: they keep the reference's
+phrasing through ``engine.error_string``. PySpark reads the setting
+once per process, from the first active session.
 """
 
 from __future__ import annotations
@@ -32,6 +44,8 @@ def get_spark(app_name: str = "dqe-spark") -> SparkSession:
         # HDR-exact fallbacks) — never row-at-a-time Python.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # no per-Column call-site capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # The engine builds its semi-joins exactly where it wants them
         # (series_limit: tiny winner set broadcast back onto the scored
         # aggregate). PushDownLeftSemiAntiJoin rewrites that into a join

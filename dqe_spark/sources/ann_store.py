@@ -41,9 +41,9 @@ from pyspark.sql import functions as F
 from dqe_spark.sources.store import (
     STORE_ROOT,
     current,
+    load_memo,
     publish,
     publish_replacing,
-    session_load_memo,
 )
 
 
@@ -195,8 +195,8 @@ def load_ann(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict] | None:
     """(index DataFrame, meta) if the index is built, else None.
     Memoized per session: re-listing the index files + re-reading the
     centroid/codebook meta per serve was most of a warm serve's wall
-    (see store.session_load_memo), keyed by the generation every
-    writer below publishes."""
+    (see store.load_memo), replaced when a writer below publishes a
+    new generation."""
     p = ann_path(sf_dir)
     if p is None:
         return None
@@ -205,7 +205,7 @@ def load_ann(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict] | None:
         meta = json.loads((p / "meta.json").read_text())
         return spark.read.parquet(str(p / "index")), meta
 
-    return session_load_memo(spark, ("ann", str(p)), _load)
+    return load_memo(spark, ("ann", str(_ann_dir(sf_dir))), p, _load)
 
 
 def knn_pq_probed(

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from dqe_spark.sources.store import (
     STORE_ROOT,
     current,
+    load_memo,
     publish,
-    session_load_memo,
 )
 
 #: default gram-bucket count — matches the registry oracle's B.
@@ -147,7 +147,7 @@ def load_dsir_model(
     if a streaming maintainer has landed one, the complete-mode stream
     part, sum-merged per bucket (counts are additive; ≤B rows either
     way). Memoized per session like every serving store
-    (store.session_load_memo)."""
+    (store.load_memo)."""
     p = _dsir_dir(sf_dir, target_lang)
     if not (p / "_SUCCESS").exists():
         build_dsir_model(spark, sf_dir, target_lang)
@@ -166,7 +166,7 @@ def load_dsir_model(
             )
         )
 
-    return session_load_memo(spark, ("dsir", str(gen), str(sp)), _load)
+    return load_memo(spark, ("dsir", str(p)), (gen, sp), _load)
 
 
 def merge_dsir_increment(

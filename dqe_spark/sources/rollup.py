@@ -31,11 +31,12 @@ from pyspark.sql import functions as F
 
 from dqe_spark.sources.store import (
     STORE_ROOT,
+    application_id,
     current,
+    load_memo,
     publish,
     publish_replacing,
     read_current,
-    session_load_memo,
 )
 
 #: window aggregates answerable from the partials
@@ -649,7 +650,7 @@ def load_portable_distinct_rollup(
             df = spark.read.parquet(str(current(p)))
         return df
 
-    return session_load_memo(spark, ("store", str(current(p))), _load)
+    return load_memo(spark, ("pdistinct", str(p)), current(p), _load)
 
 
 def portable_distinct_agg(
@@ -1255,7 +1256,7 @@ def portable_retention_1d(
     # serving-path guard can assert store-only scans; the default
     # serves through the barriers.
     memo_key = (
-        spark.sparkContext.applicationId,
+        application_id(spark),
         str(current(_pdistinct_dir(sf_dir, 3_600_000))),
     )
     if checkpoint and memo_key in _DREG_MEMO:

@@ -47,6 +47,7 @@ import os
 import re
 import shutil
 import time
+import weakref
 from collections.abc import Callable, Iterable
 from pathlib import Path
 
@@ -114,26 +115,33 @@ def load(
     """Read the materialized store if present (None → caller falls back
     to the view derivation). Column order normalized to the view's;
     the date layout additionally exposes its ``dt`` partition column so
-    the query layer can turn time ranges into partition pruning."""
+    the query layer can turn time ranges into partition pruning.
+    Memoized per generation (load_memo)."""
     p = materialized_path(sf_dir, layout)
     if p is None:
         return None
-    df = spark.read.parquet(str(p))
-    cols = [
-        F.col("bucket").cast("string"),
-        F.col("metric").cast("string"),
-        "metric_parts",
-        "tags",
-        "host",
-        "dc",
-        "user",
-        "ts_ms",
-        "value",
-        "confidence",
-    ]
-    if "dt" in df.columns:
-        cols.append(F.col("dt").cast("string"))
-    return df.select(*cols)
+
+    def _load() -> DataFrame:
+        df = spark.read.parquet(str(p))
+        cols = [
+            F.col("bucket").cast("string"),
+            F.col("metric").cast("string"),
+            "metric_parts",
+            "tags",
+            "host",
+            "dc",
+            "user",
+            "ts_ms",
+            "value",
+            "confidence",
+        ]
+        if "dt" in df.columns:
+            cols.append(F.col("dt").cast("string"))
+        return df.select(*cols)
+
+    return load_memo(
+        spark, ("metrics", str(_store_dir(sf_dir, layout))), p, _load
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -165,26 +173,43 @@ DEFAULT_BUCKETS = 32
 BUCKETED_TARGET_ROWS = 4_000_000
 
 
-#: per-session memo of loaded store DataFrames: re-planning a serve
-#: re-lists the store's parquet files every call (measured 0.68 s of a
-#: 0.95 s warm serve at sf0.1 — the file index, not execution, was the
-#: wall). A loaded DataFrame carries its InMemoryFileIndex, so reusing
-#: the OBJECT skips the relisting while the plan still shows the real
-#: store scan (serving-path guards keep working — nothing is
-#: checkpointed or cached here, only the analyzed relation reused).
-#: Keyed by applicationId so a new session never sees stale state, and
-#: by the resolved generation (``current``) so a rebuild or mutation by
-#: another process is a new key; ``publish`` also clears it.
-_LOAD_MEMO: dict[tuple, object] = {}
+#: memo of loaded store DataFrames (and metadata blobs). Every
+#: ``spark.read.parquet`` re-lists the store's files — two eager
+#: listing jobs and a few hundred py4j round trips — which made store
+#: loads a third of every short query's plan build. A loaded
+#: DataFrame carries its InMemoryFileIndex, so reusing the OBJECT
+#: skips the relisting while the plan still shows the real store scan
+#: (nothing is checkpointed or cached here, only the analyzed relation
+#: reused). One entry per (application, store): the value is kept with
+#: the generation it was read from and replaced when ``current(out)``
+#: moves, so a rebuild or mutation by any process is a miss and a
+#: long-lived process pins at most one generation per store.
+#: ``publish`` also clears it.
+_LOAD_MEMO: dict[tuple, tuple[object, object]] = {}
+
+#: applicationId per SparkContext object: reading it is a py4j round
+#: trip, and the memo key needs it on every load
+_APP_IDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def session_load_memo(spark, key: tuple, build):
-    """Memoize ``build()`` (a loaded store DataFrame or metadata blob)
-    per (application, *key). See _LOAD_MEMO for why."""
-    k = (spark.sparkContext.applicationId, *key)
-    if k not in _LOAD_MEMO:
-        _LOAD_MEMO[k] = build()
-    return _LOAD_MEMO[k]
+def application_id(spark) -> str:
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    return app
+
+
+def load_memo(spark, key: tuple, gen, build):
+    """``build()`` memoised per (application, *key) while the store it
+    reads is at generation ``gen`` (``current(out)``, or whatever
+    identifies the files ``build`` reads); a different ``gen``
+    replaces the entry. See _LOAD_MEMO for why."""
+    k = (application_id(spark), *key)
+    hit = _LOAD_MEMO.get(k)
+    if hit is None or hit[0] != gen:
+        hit = _LOAD_MEMO[k] = (gen, build())
+    return hit[1]
 
 
 def invalidate_load_memo() -> None:
@@ -313,11 +338,12 @@ def drop(out: Path) -> None:
 
 def read_current(spark: SparkSession, out: Path) -> DataFrame:
     """The store's current generation as a DataFrame, memoized per
-    generation: a rebuild — by this process or another — publishes a
-    new generation and so a new memo key, never a stale file index."""
+    generation (load_memo): a rebuild — by this process or another —
+    publishes a new generation and so replaces the entry, never
+    serving a stale file index."""
     gen = current(out)
-    return session_load_memo(
-        spark, ("store", str(gen)), lambda: spark.read.parquet(str(gen))
+    return load_memo(
+        spark, ("parquet", str(out)), gen, lambda: spark.read.parquet(str(gen))
     )
 
 
@@ -609,20 +635,24 @@ def ingest_events(spark: SparkSession, sf_dir: str, force: bool = False) -> Path
 
 def load_events_store(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """The materialized event store if built (None → view fallback).
-    Canonical column order + the dt partition column for pruning."""
+    Canonical column order + the dt partition column for pruning.
+    Memoized per generation (load_memo)."""
     p = _events_dir(sf_dir)
     if not (p / "_SUCCESS").exists():
         return None
-    df = spark.read.parquet(str(current(p)))
-    return df.select(
-        F.col("bucket").cast("string"),
-        "ts_ms",
-        "event_id",
-        "event_type",
-        "user_id",
-        "value",
-        "payload",
-        F.col("dt").cast("string"),
+    gen = current(p)
+    return load_memo(
+        spark, ("events", str(p)), gen,
+        lambda: spark.read.parquet(str(gen)).select(
+            F.col("bucket").cast("string"),
+            "ts_ms",
+            "event_id",
+            "event_type",
+            "user_id",
+            "value",
+            "payload",
+            F.col("dt").cast("string"),
+        ),
     )
 
 

@@ -72,6 +72,48 @@ def test_collect_ok_and_timeout(spark):
         )
 
 
+@pytest.mark.parametrize("delay_s", [0.0, 2.0], ids=["running", "submitted_late"])
+def test_timeout_cancels_a_plan_time_job(spark, monkeypatch, delay_s):
+    """A Spark job the compiler starts at plan time is bounded by
+    ``timeout_s`` and cancelled: whether it is running when the timeout
+    fires or is submitted after it, it fails instead of running to
+    completion, and collect raises QueryTimeout on time."""
+    import time
+
+    from dqe_spark.dql.compiler import Compiler
+
+    dql = f"SELECT avg('events'.'click' BUCKET 'events', 1h) BETWEEN {JAN1} AND {FEB1}"
+    engine.plan(spark, dql, SF_SMOKE)  # warm: the store loads take < 1 s
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    seen: dict = {}
+    compile_ = Compiler.compile
+
+    def slow_compile(self, ast):
+        seen["group"] = group = sc.getLocalProperty("spark.jobGroup.id")
+        seen["before"] = set(st.getJobIdsForGroup(group) if group else ())
+        time.sleep(delay_s)
+        try:
+            sc.parallelize([0], 1).map(lambda x: time.sleep(30) or x).count()
+        except Exception as e:
+            seen["err"] = e
+        seen["done"] = time.monotonic()
+        return compile_(self, ast)
+
+    monkeypatch.setattr(Compiler, "compile", slow_compile)
+    t0 = time.monotonic()
+    with pytest.raises(engine.QueryTimeout):
+        engine.collect(spark, dql, SF_SMOKE, timeout_s=1)
+    assert time.monotonic() - t0 < 10
+    while "done" not in seen and time.monotonic() - t0 < 25:
+        time.sleep(0.1)
+    assert "err" in seen and seen["done"] - t0 < 10
+    # no job of the query's group from the slow one on ran to
+    # completion: the later collect job is cancelled as it is submitted
+    jobs = set(st.getJobIdsForGroup(seen["group"])) - seen["before"]
+    assert {st.getJobInfo(j).status for j in jobs} <= {"FAILED"}
+
+
 def test_explain_dry_run(spark):
     plans = engine.explain(
         spark,

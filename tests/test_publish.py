@@ -1,6 +1,6 @@
 """store.publish: the one generation-based protocol every store and
 sink write goes through — crash safety, readers across a republish or
-a mutation, cross-process memo keys, collection, legacy migration,
+a mutation, memo entries across processes, collection, legacy migration,
 and a guard against hand-rolled publish or in-place writes creeping
 back in."""
 
@@ -71,51 +71,92 @@ def test_crash_leaves_a_complete_generation(spark, tmp_path, monkeypatch, stage)
     assert spark.read.parquet(str(gen)).count() == n
 
 
-def _dsir_rows(df) -> list[tuple]:
-    return sorted(map(tuple, df.collect()))
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
 
 
-def test_reader_keeps_its_generation_across_a_republish(spark):
+_REPUBLISHES = ["dsir", "metrics", "events"]
+
+
+def _republish(spark, name: str, tmp_path: Path):
+    """(memoised load, republish it with fewer rows, restore) for one
+    store: the DSIR model (a rebuild from half the documents), or the
+    metric or events store (``ingest``/``ingest_events(force=True)``
+    after half the raw events are gone) of a private copy of the smoke
+    data."""
+    if name == "dsir":
+        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
+        return (
+            lambda: DS.load_dsir_model(spark, SF_SMOKE, "en"),
+            lambda: DS.build_dsir_model(
+                spark, SF_SMOKE, "en", force=True,
+                docs=docs.where(F.col("doc_id") % 2 == 0),
+            ),
+            lambda: DS.build_dsir_model(spark, SF_SMOKE, "en", force=True),
+        )
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / f"publish_{name}_{os.getpid()}"
+    sf.mkdir()
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    pq.write_table(events, sf / "events.parquet")
+    ingest, load, out = {
+        "metrics": (ST.ingest, ST.load, ST._store_dir),
+        "events": (ST.ingest_events, ST.load_events_store, ST._events_dir),
+    }[name]
+    ingest(spark, str(sf))
+
+    def republish():
+        pq.write_table(events.slice(0, events.num_rows // 2), sf / "events.parquet")
+        ingest(spark, str(sf), force=True)
+
+    def restore():
+        ST.drop(out(str(sf)))
+        out(str(sf)).parent.rmdir()
+
+    return lambda: load(spark, str(sf)), republish, restore
+
+
+@pytest.mark.parametrize("name", _REPUBLISHES)
+def test_reader_keeps_its_generation_across_a_republish(spark, tmp_path, name):
     """A DataFrame loaded before a rebuild still collects its rows
     afterwards: the rebuild publishes a new generation and leaves the
     one being read in place."""
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
+    load, republish, restore = _republish(spark, name, tmp_path)
     try:
-        before = DS.load_dsir_model(spark, SF_SMOKE, "en")
-        want = _dsir_rows(before)
-        DS.build_dsir_model(
-            spark, SF_SMOKE, "en", force=True,
-            docs=docs.where(F.col("doc_id") % 2 == 0),
-        )
-        assert _dsir_rows(before) == want
+        before = load()
+        want = _rows(before)
+        republish()
+        assert _rows(load()) != want
+        assert _rows(before) == want
     finally:
-        DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
+        restore()
 
 
-def test_memoised_load_sees_a_rebuild_by_another_process(spark, monkeypatch):
+@pytest.mark.parametrize("name", _REPUBLISHES)
+def test_memoised_load_sees_a_rebuild_by_another_process(
+    spark, monkeypatch, tmp_path, name
+):
     """A rebuild this process is never told about (another process's:
     the in-process memo invalidation is a no-op here) still yields the
-    new rows on the next memoised load — the memo key is the resolved
-    generation, not the store path."""
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    store = DS._dsir_dir(SF_SMOKE, "en")
-    DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
+    new rows on the next memoised load — the memo entry is kept with
+    the generation it was read from, and a new generation replaces it."""
+    load, republish, restore = _republish(spark, name, tmp_path)
     try:
-        full = _dsir_rows(DS.load_dsir_model(spark, SF_SMOKE, "en"))
+        old = _rows(load())
         monkeypatch.setattr(ST, "invalidate_load_memo", lambda: None)
         monkeypatch.setattr(DS, "invalidate_load_memo", lambda: None, raising=False)
-        DS.build_dsir_model(
-            spark, SF_SMOKE, "en", force=True,
-            docs=docs.where(F.col("doc_id") % 2 == 0),
-        )
+        republish()
         monkeypatch.undo()
-        want = _dsir_rows(spark.read.parquet(str(store)))
-        assert want != full
-        assert _dsir_rows(DS.load_dsir_model(spark, SF_SMOKE, "en")) == want
+        got = _rows(load())
+        ST.invalidate_load_memo()
+        want = _rows(load())
+        assert want != old
+        assert got == want
     finally:
         monkeypatch.undo()
-        DS.build_dsir_model(spark, SF_SMOKE, "en", force=True)
+        restore()
 
 
 def _mutation(spark, name: str):
@@ -147,10 +188,6 @@ def _mutation(spark, name: str):
 _MUTATIONS = ["merge_rollup_increment", "gram_store.purge_doc_ids"]
 
 
-def _rows(df) -> list[str]:
-    return sorted(map(repr, df.collect()))
-
-
 @pytest.mark.parametrize("mutation", _MUTATIONS)
 def test_reader_keeps_its_generation_across_a_mutation(spark, mutation):
     """A DataFrame loaded before an increment or a purge still collects
@@ -175,7 +212,7 @@ def test_memoised_load_sees_a_mutation_by_another_process(
     """With the in-process memo invalidation a no-op (standing in for
     a mutation by another process), the next memoised load after an
     increment or a purge returns the new rows: the mutation is a new
-    generation, so a new memo key."""
+    generation, which replaces the memo entry."""
     from dqe_spark.sources import gram_store as GS
     from dqe_spark.sources import rollup as R
 
